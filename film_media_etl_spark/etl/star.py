@@ -16,10 +16,12 @@ Design decisions vs the reference:
 - Surrogate keys are deterministic ``row_number()`` over a canonical sort
   (reference: MySQL AUTO_INCREMENT). NOT monotonically_increasing_id —
   that is partition-dependent and breaks reproducible oracle checks.
-  Dimensions (small) use a plain global window; the FACT key uses
-  ``_global_index`` — a bucketed two-pass global row number that sorts on
-  nbuckets partitions in parallel instead of collapsing the fact to a
-  single partition (see its docstring). The testdata's lineitem has
+  dim_location (bounded by geography) uses a plain global window; the
+  customer and product dims and the FACT key use ``_global_index`` — a
+  bucketed global row number over collected per-bucket counts
+  (``prepare_global_index``) that sorts bucket-partitioned in parallel
+  instead of collapsing the table to a single partition (see its
+  docstring). The testdata's lineitem has
   no unique natural key (verified: (l_orderkey, l_linenumber) has dups),
   so the fact key orders by every column — deterministic even under
   full-row duplicates.
@@ -39,7 +41,8 @@ Design decisions vs the reference:
 - Dedup-on-load for dim_location via union+distinct (INSERT IGNORE
   semantics, createStarSchema...R:97).
 
-Every builder returns a lazy DataFrame; ``STAR_CTES`` is the DuckDB-SQL
+Every builder returns a DataFrame (the customer and product dims and the
+fact collect their index stats first); ``STAR_CTES`` is the DuckDB-SQL
 twin of the whole pipeline so any star query is oracle-checkable.
 """
 
@@ -93,10 +96,8 @@ def build_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute set incl. smart key and NON-ISO week (createStarSchema...R:
     59-71; ` loadAnalyticsDB...R`:56-137)."""
     o = load_table(spark, sf_dir, "orders")
-    # LAZY spine (optimization round 10): the date range used to be
-    # collected with .first() — a driver-blocking job before the spine
-    # could even be planned. Exploding the sequence directly over the
-    # 1-row min/max aggregate keeps the whole dim one Spark job.
+    # The date range is never collected: exploding the sequence directly
+    # over the 1-row min/max aggregate keeps the whole dim one Spark job.
     spine = o.agg(
         F.min("o_orderdate").alias("lo"), F.max("o_orderdate").alias("hi")
     ).select(
@@ -131,18 +132,17 @@ def build_dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dim-sized but unbounded). Each source is indexed over ITS OWN key
     # range and the music block is offset by the film row count —
     # equivalent to one row_number over the two-column sort ('film' <
-    # 'music', ids unique per source). NOT the old single-index trick of
+    # 'music', ids unique per source). NOT a single index over
     # sort_id = id + (music ? 2^40 : 0): a uniform bucket split over a
     # range dominated by the 2^40 type offset puts every film row in
     # bucket 0 and every music row in the last bucket — two
     # single-partition sorts, exactly the bottleneck _global_index exists
-    # to remove (round-2 advisory). Per-source ranges are dense, so the
-    # 64 buckets stay balanced within each source.
-    # The index's auxiliary jobs (key range, per-bucket counts, total)
-    # need only the id DISTRIBUTION — serve them from a key-only
-    # projection semi-joined against the geo chain's dimension keys
-    # (exactly the rows the inner joins keep, at 1-column scan cost)
-    # instead of re-running the 4-way join three times.
+    # to remove. Per-source ranges are dense, so the buckets stay
+    # balanced within each source.
+    # The index stats need only the id DISTRIBUTION — collect them from a
+    # key-only projection semi-joined against the geo chain's dimension
+    # keys (exactly the rows the inner joins keep, at 1-column scan cost)
+    # instead of running the 4-way join for them.
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     valid_nations = n.join(
@@ -166,32 +166,22 @@ def build_dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(offset_music_id(F.col("s_suppkey")).alias("_sort_id"))
     )
-    # LAZY indexes (optimization round 10): the former spelling collected
-    # each source's key stats with two driver-blocking jobs (hidden
-    # behind a thread pool that this change deletes); the lazy
-    # _global_index rides the stats as broadcast aggregates inside the
-    # one dim job. The music block's offset — the film row count — rides
-    # a broadcast 1-row count the same way instead of a collected int.
+    film_stats = prepare_global_index(film_ids, "_sort_id")
+    music_stats = prepare_global_index(music_ids, "_sort_id")
     film_keyed = _global_index(
         both.where(F.col("customer_type") == "film"),
         ["customer_id"],
         "customer_id",
+        film_stats,
         out_col="customer_key",
-        stats_df=film_ids.withColumnRenamed("_sort_id", "customer_id"),
     )
-    n_film = film_ids.agg(F.count(F.lit(1)).alias("_n_film"))
-    music_keyed = (
-        _global_index(
-            both.where(F.col("customer_type") == "music"),
-            ["customer_id"],
-            "customer_id",
-            out_col="customer_key",
-            stats_df=music_ids.withColumnRenamed("_sort_id", "customer_id"),
-        )
-        .crossJoin(F.broadcast(n_film))
-        .withColumn("customer_key", F.col("customer_key") + F.col("_n_film"))
-        .drop("_n_film")
-    )
+    music_keyed = _global_index(
+        both.where(F.col("customer_type") == "music"),
+        ["customer_id"],
+        "customer_id",
+        music_stats,
+        out_col="customer_key",
+    ).withColumn("customer_key", F.col("customer_key") + F.lit(film_stats[3]))
     return film_keyed.unionByName(music_keyed).select(
         F.col("customer_key").cast("int").alias("customer_key"),
         "customer_id",
@@ -237,7 +227,8 @@ def build_dim_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Parallel surrogate keys (see build_dim_customer) — the product dim
     # is catalog-sized, the one dim most likely to outgrow a single
     # partition at warehouse scale.
-    return _global_index(p, ["p_partkey"], "p_partkey", out_col="_pk").select(
+    stats = prepare_global_index(p.select("p_partkey"), "p_partkey")
+    return _global_index(p, ["p_partkey"], "p_partkey", stats, out_col="_pk").select(
         F.col("_pk").cast("int").alias("product_key"),
         F.col("p_partkey").alias("product_id"),
         F.substring("p_name", 1, 255).alias("product_name"),
@@ -251,123 +242,56 @@ def _global_index(
     df: DataFrame,
     order_cols: list[str],
     leading_key: str,
+    stats: tuple[int, int, dict[int, int], int],
     *,
-    nbuckets: int = 64,
     out_col: str = "_idx",
-    stats_df: DataFrame | None = None,
-    prepared: tuple[int, int, dict[int, int], int] | None = None,
 ) -> DataFrame:
     """Deterministic global row_number over ``order_cols``, computed in
     parallel — the scale-safe replacement for a global (single-partition)
     window.
 
-    Because ``leading_key`` is the first column of the canonical order,
-    ``bucket = floor((key - min) / span)`` is monotone in that order and
-    ties (equal keys) always land in the same bucket. The global index is
-    then  offset(bucket) + row_number within bucket  — bit-identical to
-    ``ROW_NUMBER() OVER (ORDER BY order_cols)`` but the sort runs on
-    ``nbuckets`` partitions instead of one. The offsets come from a tiny
-    count-per-bucket aggregate (<= nbuckets rows to the driver), the same
-    two-pass shape as the reference's date-range detection
-    (` loadAnalyticsDB...R`:59-92). At cluster scale raise ``nbuckets``
-    to ~2-3x total cores.
+    ``stats`` is ``prepare_global_index``'s (lo, span, offsets, total)
+    over ``leading_key``. Because ``leading_key`` is the first column of
+    the canonical order, ``bucket = floor((key - lo) / span)`` is
+    monotone in that order and ties (equal keys) always land in the same
+    bucket. The global index is then  offset(bucket) + row_number within
+    bucket  — bit-identical to ``ROW_NUMBER() OVER (ORDER BY
+    order_cols)``, but the sort runs hash-partitioned on the bucket
+    instead of on one partition, and the offsets are literals, so the
+    indexed plan carries no auxiliary aggregate. The result does not
+    depend on the bucket mapping — pinned by
+    tests/test_function_models.py::test_global_index_invariant_to_nbuckets.
+    A row whose leading key is NULL is kept with a NULL index."""
+    lo, span, offsets = stats[0], stats[1], stats[2]
+    if not offsets:  # empty input: emit the schema, no rows to index
+        return df.withColumn(out_col, F.lit(None).cast("long"))
 
-    ``stats_df``, when given, supplies the leading-key DISTRIBUTION for
-    the two auxiliary aggregates through a cheaper plan (e.g. a key-only
-    semi-join instead of a full-width join). It must contain exactly one
-    row per row of ``df`` with the same ``leading_key`` values — the
-    range may be a superset (empty buckets cost nothing) but the counts
-    must be exact, or the concatenated offsets would drift.
+    def bucket(c):
+        return F.floor((c - F.lit(lo)) / F.lit(span)).cast("int")
 
-    LAZY by default (optimization round 10, guide §5 "the driver should
-    do almost no data work"): the key range rides a broadcast 1-row
-    aggregate and the per-bucket offsets a broadcast <=nbuckets-row
-    cumulative frame, so the whole index is ONE Spark job at action
-    time — the former spelling ran two driver-BLOCKING collect jobs per
-    index (x4 indexes per warehouse build) and needed a thread pool to
-    hide them. The bucket arithmetic uses exact integral `div` on the
-    key-minus-min (valid for any numeric key; the quotient is
-    non-negative), and the result is bucket-mapping-invariant — pinned
-    by tests/test_function_models.py::test_global_index_invariant_to_nbuckets.
-
-    ``prepared`` short-circuits the auxiliary aggregates with collected
-    stats from ``prepare_global_index`` — the literal path is kept for
-    callers that reuse stats across several builds."""
-    if prepared is not None:
-        lo, span, offsets = prepared[0], prepared[1], prepared[2]
-        if not offsets:  # empty input: emit the schema, no rows to index
-            return df.withColumn(out_col, F.lit(None).cast("long"))
-
-        def bucket(c):
-            return F.floor((c - F.lit(lo)) / F.lit(span)).cast("int")
-
-        dfb = df.withColumn("_bucket", bucket(F.col(leading_key)))
-        omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        w = Window.partitionBy("_bucket").orderBy(*order_cols)
-        return dfb.withColumn(
-            out_col, (omap[F.col("_bucket")] + F.row_number().over(w)).cast("long")
-        ).drop("_bucket")
-
-    # Keys are floored to BIGINT before the integral div: monotone in the
-    # key (ties stay together), exact for any numeric key type (double /
-    # decimal / integral), and consistent between the offsets branch and
-    # the indexed branch — the only properties the bucket mapping needs
-    # (the index itself is bucket-mapping-invariant).
-    keys = (stats_df if stats_df is not None else df).select(
-        F.floor(F.col(leading_key)).cast("bigint").alias("_gi_k")
-    )
-    bounds = keys.agg(
-        F.min("_gi_k").alias("_gi_lo"), F.max("_gi_k").alias("_gi_hi")
-    ).select(
-        "_gi_lo",
-        (F.expr(f"(_gi_hi - _gi_lo) div {nbuckets}") + F.lit(1)).alias("_gi_span"),
-    )
-    offs = (
-        keys.crossJoin(F.broadcast(bounds))
-        .groupBy(
-            F.expr("(_gi_k - _gi_lo) div _gi_span").cast("int").alias("_gi_bucket")
-        )
-        .agg(F.count(F.lit(1)).alias("_gi_cnt"))
-        .withColumn(
-            "_gi_off",
-            F.coalesce(
-                F.sum("_gi_cnt").over(
-                    # bounded frame: <= nbuckets rows by construction
-                    Window.orderBy("_gi_bucket").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_gi_bucket", "_gi_off")
-    )
-    dfb = df.crossJoin(F.broadcast(bounds)).withColumn(
-        "_gi_bucket",
-        F.expr(f"(floor(`{leading_key}`) - _gi_lo) div _gi_span").cast("int"),
-    )
-    w = Window.partitionBy("_gi_bucket").orderBy(*order_cols)
-    # LEFT join (round-11 advice): a NULL/out-of-range leading key (a
-    # documented contract violation) now degrades exactly like the
-    # prepared path — row kept, index NULL (NULL _gi_off + row_number
-    # is NULL, as omap[NULL] is NULL) — instead of being silently
-    # dropped by an inner join.
-    return (
-        dfb.join(F.broadcast(offs), ["_gi_bucket"], "left")
-        .withColumn(out_col, (F.col("_gi_off") + F.row_number().over(w)).cast("long"))
-        .drop("_gi_bucket", "_gi_lo", "_gi_span", "_gi_off")
-    )
+    dfb = df.withColumn("_bucket", bucket(F.col(leading_key)))
+    omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    w = Window.partitionBy("_bucket").orderBy(*order_cols)
+    return dfb.withColumn(
+        out_col, (omap[F.col("_bucket")] + F.row_number().over(w)).cast("long")
+    ).drop("_bucket")
 
 
 def prepare_global_index(
     sdf: DataFrame, leading_key: str, *, nbuckets: int = 64
 ) -> tuple[int, int, dict[int, int], int]:
-    """Run _global_index's two auxiliary jobs (key range, per-bucket
-    counts) and return (lo, span, cumulative offsets, total rows).
+    """Collect ``_global_index``'s stats over ``sdf[leading_key]`` with
+    two small jobs (key range, per-bucket counts — <= nbuckets + 1 rows
+    to the driver) and return (lo, span, cumulative offsets, total rows).
+    ``sdf`` must hold exactly the leading keys of the rows to be indexed;
+    any plan with that key multiset will do (e.g. a key-only semi-join
+    instead of a full-width join). At cluster scale raise ``nbuckets`` to
+    ~2-3x total cores.
 
-    An EMPTY stats input (min/max NULL) returns (0, 1, {}, 0) rather than
-    raising — reachable from thread-pooled callers (build_star's fact
-    stats future) where a TypeError would surface only at .result()."""
+    NULL keys get no bucket and are not counted in ``total``. An EMPTY
+    (or all-NULL) input returns (0, 1, {}, 0) rather than raising —
+    reachable from thread-pooled callers where a TypeError would surface
+    only at .result()."""
     lo, hi = sdf.agg(F.min(leading_key), F.max(leading_key)).first()
     if lo is None:
         return 0, 1, {}, 0
@@ -384,7 +308,9 @@ def prepare_global_index(
     )
     offsets: dict[int, int] = {}
     acc = 0
-    for row in sorted(counts, key=lambda r: r["_bucket"]):
+    for row in sorted(
+        (r for r in counts if r["_bucket"] is not None), key=lambda r: r["_bucket"]
+    ):
         offsets[row["_bucket"]] = acc
         acc += row["cnt"]
     return lo, span, offsets, acc
@@ -430,32 +356,29 @@ def build_fact_sales(
     dim_customer: DataFrame | None = None,
     dim_location: DataFrame | None = None,
     dim_product: DataFrame | None = None,
-    index_stats: tuple[int, int, dict[int, int]] | None = None,
+    index_stats: tuple[int, int, dict[int, int], int] | None = None,
 ) -> DataFrame:
     """fact_sales: one row per lineitem with resolved dimension keys,
     denormalized pruning columns (year/quarter/month/product_type/country,
     createStarSchema...R:149-161 + README:130-134) and populated
-    YTD/QTD/MTD cumulative measures (SURVEY op 27)."""
+    YTD/QTD/MTD cumulative measures (SURVEY op 27). ``index_stats`` is
+    ``prepare_global_index`` over ``fact_index_stats``; it is collected
+    here when not given."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     dc = (dim_customer or build_dim_customer(spark, sf_dir)).alias("dc")
     dl = (dim_location or build_dim_location(spark, sf_dir)).alias("dl")
     dp = (dim_product or build_dim_product(spark, sf_dir)).alias("dp")
+    if index_stats is None:
+        index_stats = prepare_global_index(fact_index_stats(spark, sf_dir), "l_orderkey")
 
-    # The surrogate-key pass (_global_index) needs two auxiliary jobs
-    # (key range, per-bucket counts) before the final indexed pass. Both
-    # depend ONLY on the leading key's distribution, so they run on the
-    # narrow fact_index_stats plan — or arrive precomputed from
-    # build_star's concurrent prepare. At 100 TB the aux jobs are
-    # columnar single-column scans; the real join runs exactly once.
     base = (
         _global_index(
             li.join(o, li.l_orderkey == o.o_orderkey),
             _FACT_ORDER,
             "l_orderkey",
+            index_stats,
             out_col="fact_key",
-            stats_df=fact_index_stats(spark, sf_dir) if index_stats is None else None,
-            prepared=index_stats,
         )
         .select(
             "fact_key",
@@ -654,129 +577,104 @@ def summary_from_support(support: DataFrame) -> DataFrame:
 _STAR_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 
-def build_star(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> dict[str, DataFrame]:
+def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Build every star table; memoized per (session, sf_dir).
 
-    With ``materialize=True`` (default) the tables are WRITTEN once to a
-    session-scoped warehouse directory — the fact hive-partitioned by
-    year — and all subsequent queries scan that parquet. This is the
-    reference's actual architecture (reports query the loaded MySQL
-    warehouse, not the ETL; BusinessAnalysis...Rmd:40-44) and the scale
-    posture: the ETL runs once, the 15-report workload reads columnar
-    warehouse files with partition pruning, instead of re-running the
-    join+window pipeline per report (report r03's derived-table subquery
-    would otherwise recompute the whole fact twice in one query)."""
+    The tables are WRITTEN once to a session-scoped warehouse directory —
+    the fact hive-partitioned by year — and all subsequent queries scan
+    that parquet. This is the reference's actual architecture (reports
+    query the loaded MySQL warehouse, not the ETL;
+    BusinessAnalysis...Rmd:40-44) and the scale posture: the ETL runs
+    once, the 15-report workload reads columnar warehouse files with
+    partition pruning, instead of re-running the join+window pipeline per
+    report (report r03's derived-table subquery would otherwise recompute
+    the whole fact twice in one query)."""
     import os
     import tempfile
+    from concurrent.futures import ThreadPoolExecutor
 
     # applicationId is unique per session lifetime; id(spark) could be
     # reused by a new session at the same address after stop().
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
     if key not in _STAR_CACHE:
-        tables = {
-            "dim_date": build_dim_date(spark, sf_dir),
-            "dim_customer": build_dim_customer(spark, sf_dir),
-            "dim_location": build_dim_location(spark, sf_dir),
-            "dim_product": build_dim_product(spark, sf_dir),
+        base = os.path.join(
+            tempfile.gettempdir(),
+            f"fmes_warehouse_{os.getpid()}",
+            os.path.basename(sf_dir.rstrip("/")),
+        )
+
+        def _write(name: str, df: DataFrame, partition_by: str | None = None) -> DataFrame:
+            path = os.path.join(base, name)
+            if partition_by is None:
+                # Dims are dimension-sized: landing them as one file per
+                # write avoids the small-files tax on every downstream
+                # broadcast read (38 part files for a 16k-row dim
+                # measured locally). repartition, NOT coalesce —
+                # coalesce(1) would propagate up and run the parallel
+                # surrogate-key window on one partition; the explicit
+                # exchange keeps upstream parallel and only the
+                # dim-sized result moves. A catalog-scale dim on a
+                # cluster should raise this toward one file per ~128MB —
+                # keep the knob next to the write.
+                df = df.repartition(1)
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(path)
+            # Read back with the KNOWN schema: skips the inference
+            # file-listing pass, and an EMPTY input (no part files
+            # written) still yields a correctly-shaped empty table
+            # instead of an AnalysisException. Partition columns are
+            # part of df.schema, so partitioned reads line up too.
+            return spark.read.schema(df.schema).parquet(path)
+
+        # Dims land first and the fact builds FROM the read-back parquet
+        # dims — the warehouse load order (dims before facts,
+        # ` loadAnalyticsDB...R`:main) and also the cheaper plan: the fact
+        # job broadcasts three tiny parquet scans instead of re-running
+        # each dim's join+window lineage inline.
+        # The four dim builds (their index-stats jobs included) and the
+        # fact's index stats are independent, so they run as CONCURRENT
+        # Spark jobs in one pool (job submission is thread-safe; the
+        # scheduler interleaves their stages): the wall time before the
+        # fact job is the slowest of them, not the sum.
+        dim_builders = {
+            "dim_date": build_dim_date,
+            "dim_customer": build_dim_customer,
+            "dim_location": build_dim_location,
+            "dim_product": build_dim_product,
         }
-        if materialize:
-            base = os.path.join(
-                tempfile.gettempdir(),
-                f"fmes_warehouse_{os.getpid()}",
-                os.path.basename(sf_dir.rstrip("/")),
+        with ThreadPoolExecutor(max_workers=len(dim_builders) + 1) as pool:
+            stats_fut = pool.submit(
+                prepare_global_index, fact_index_stats(spark, sf_dir), "l_orderkey"
             )
-
-            def _write(name: str, df: DataFrame, partition_by: str | None = None) -> DataFrame:
-                path = os.path.join(base, name)
-                if partition_by is None:
-                    # Dims are dimension-sized: landing them as one file
-                    # per write avoids the small-files tax on every
-                    # downstream broadcast read (38 part files for a
-                    # 16k-row dim measured locally). repartition, NOT
-                    # coalesce — coalesce(1) would propagate up and run
-                    # the parallel surrogate-key window on one partition;
-                    # the explicit exchange keeps upstream parallel and
-                    # only the dim-sized result moves. A catalog-scale
-                    # dim on a cluster should raise this toward one file
-                    # per ~128MB — keep the knob next to the write.
-                    df = df.repartition(1)
-                writer = df.write.mode("overwrite")
-                if partition_by:
-                    writer = writer.partitionBy(partition_by)
-                writer.parquet(path)
-                # Read back with the KNOWN schema: skips the inference
-                # file-listing pass, and an EMPTY input (no part files
-                # written) still yields a correctly-shaped empty table
-                # instead of an AnalysisException. Partition columns are
-                # part of df.schema, so partitioned reads line up too.
-                return spark.read.schema(df.schema).parquet(path)
-
-            # Dims land first and the fact builds FROM the read-back
-            # parquet dims — the warehouse load order (dims before facts,
-            # ` loadAnalyticsDB...R`:main) and also the cheaper plan: the
-            # fact job broadcasts three tiny parquet scans instead of
-            # re-running each dim's join+window lineage inline.
-            # The four dim loads are independent — submit them as
-            # CONCURRENT Spark jobs (job submission is thread-safe; the
-            # scheduler interleaves their stages) so the ETL wall time is
-            # the slowest dim, not the sum. Same pattern a cluster
-            # deployment uses to keep executors busy through the many
-            # small dim jobs.
-            from concurrent.futures import ThreadPoolExecutor
-
-            dim_names = ("dim_date", "dim_customer", "dim_location", "dim_product")
-            # The fact's surrogate-key stats depend on NO dim, so their
-            # two auxiliary jobs (key range, per-bucket counts — ~64
-            # rows to the driver, not data work) run in the SAME pool,
-            # overlapping the dim writes (guide §2.6 "overlap
-            # independent jobs"; optimization round 11 — verdict next-
-            # round #1: previously these aux aggregates ran as lazy
-            # broadcasts INSIDE the fact job, i.e. strictly AFTER the
-            # last dim landed, adding their latency to the critical
-            # path).
-            with ThreadPoolExecutor(max_workers=len(dim_names) + 1) as pool:
-                stats_fut = pool.submit(
-                    prepare_global_index,
-                    fact_index_stats(spark, sf_dir),
-                    "l_orderkey",
-                )
-                futures = {
-                    name: pool.submit(_write, name, tables[name]) for name in dim_names
-                }
-                for name, fut in futures.items():
-                    tables[name] = fut.result()
-                fact_stats = stats_fut.result()[:3]
-            fact = build_fact_sales(
-                spark,
-                sf_dir,
-                dim_customer=tables["dim_customer"],
-                dim_location=tables["dim_location"],
-                dim_product=tables["dim_product"],
-                index_stats=fact_stats,
-            )
-            # NO repartition before the partitioned write: the MTD window
-            # already leaves the fact hash-partitioned by (year, month),
-            # which is year-clustered too — each writer task owns whole
-            # year directories, just at month granularity (54 files vs 7
-            # at sf0.1, but ~15% faster: an extra full-fact exchange
-            # costs more than 47 extra files). This is also the cluster
-            # posture: repartition("year") would collapse each year to
-            # ONE writer task (7 hot tasks at any scale), while the
-            # (year, month) layout keeps 12x the writer parallelism and
-            # still prunes cleanly. If file counts ever matter more than
-            # the exchange, a REBALANCE(year) hint is the knob.
-            tables["fact_sales"] = _write("fact_sales", fact, partition_by="year")
-        else:
-            tables["fact_sales"] = build_fact_sales(
-                spark,
-                sf_dir,
-                dim_customer=tables["dim_customer"],
-                dim_location=tables["dim_location"],
-                dim_product=tables["dim_product"],
-            )
-        # The pre-aggregate derives from the (materialized) fact so it is
+            futures = {
+                name: pool.submit(lambda n, b: _write(n, b(spark, sf_dir)), name, builder)
+                for name, builder in dim_builders.items()
+            }
+            tables = {name: fut.result() for name, fut in futures.items()}
+            fact_stats = stats_fut.result()
+        fact = build_fact_sales(
+            spark,
+            sf_dir,
+            dim_customer=tables["dim_customer"],
+            dim_location=tables["dim_location"],
+            dim_product=tables["dim_product"],
+            index_stats=fact_stats,
+        )
+        # NO repartition before the partitioned write: the MTD window
+        # already leaves the fact hash-partitioned by (year, month),
+        # which is year-clustered too — each writer task owns whole year
+        # directories, just at month granularity (54 files vs 7 at sf0.1,
+        # but ~15% faster: an extra full-fact exchange costs more than 47
+        # extra files). This is also the cluster posture:
+        # repartition("year") would collapse each year to ONE writer task
+        # (7 hot tasks at any scale), while the (year, month) layout keeps
+        # 12x the writer parallelism and still prunes cleanly. If file
+        # counts ever matter more than the exchange, a REBALANCE(year)
+        # hint is the knob.
+        tables["fact_sales"] = _write("fact_sales", fact, partition_by="year")
+        # The pre-aggregate derives from the materialized fact so it is
         # computed from warehouse parquet, not by re-running the ETL.
         tables["sales_summary"] = build_sales_summary(tables["fact_sales"])
         _STAR_CACHE[key] = tables

@@ -41,20 +41,6 @@ def month_name(d: ColumnOrName) -> Column:
     return F.date_format(_col(d), "MMMM")
 
 
-def date_parts(d: ColumnOrName) -> dict[str, Column]:
-    """The full dim_date attribute set in one place."""
-    c = _col(d)
-    return {
-        "date_key": smart_date_key(c),
-        "year": F.year(c),
-        "quarter": F.quarter(c),
-        "month": F.month(c),
-        "month_name": month_name(c),
-        "day": F.dayofmonth(c),
-        "week": week_of_year_noniso(c),
-    }
-
-
 def date_spine(
     spark: SparkSession,
     start: Column,
@@ -74,10 +60,3 @@ def date_spine(
     return bounds.select(
         F.explode(F.sequence(F.col("lo"), F.col("hi"), F.expr("interval 1 day"))).alias("date")
     )
-
-
-def with_date_parts(df: DataFrame, d: ColumnOrName) -> DataFrame:
-    out = df
-    for name, expr in date_parts(d).items():
-        out = out.withColumn(name, expr)
-    return out

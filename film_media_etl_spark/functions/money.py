@@ -43,13 +43,3 @@ def money_avg(c: Column, alias: str) -> Column:
     """AVG with an exact numerator: decimal sum cast to double, divided by
     count — one deterministic double division, identical across engines."""
     return (F.sum(dec(c)).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
-# The DuckDB-side spellings of the same conventions, used when composing
-# oracle SQL strings:
-def oracle_money_sum(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS {alias}"
-
-
-def oracle_money_avg(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS {alias}"

@@ -816,6 +816,23 @@ def simhash_survivors(
     )
 
 
+def _shingle_key(shingle: Column) -> list[Column]:
+    """The 128-bit identity of a token-array shingle: two xxhash64 chains
+    over the array that start from different states — ``h1`` from the
+    default seed, ``h2`` after first absorbing the literal 1. Neither is a
+    function of the other, so under the usual model of xxhash64 as a
+    random function per start state, two DIFFERENT shingles share the
+    pair with probability ~2^-128; over S shingle occurrences the union
+    bound on ANY such collision is ~S^2 / 2^129 (< 1e-14 at S = 10^12).
+    (Seeding ``h2`` with ``h1`` instead — ``xxhash64(shingle, 1)`` —
+    makes the pair collide whenever ``h1`` does: a 64-bit key.) Hashing
+    the ARRAY, not a joined string, keeps token boundaries significant:
+    ["a b", "c"] and ["a", "b c"] hash as different chains. The DuckDB
+    oracle groups on the shingle strings, so a collision on the test
+    data would fail the oracle check."""
+    return [F.xxhash64(shingle).alias("h1"), F.xxhash64(F.lit(1), shingle).alias("h2")]
+
+
 def exact_substring_dedup(
     docs: DataFrame,
     *,
@@ -883,26 +900,9 @@ def exact_substring_dedup(
     t = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc_id"), toks.alias("toks")
     )
-    # Shingle identity as a 128-bit hash pair (optimization round 11,
-    # guide §2.3 "shuffle keys instead of payloads"): the k-token
-    # shingle STRING was built per position (array_join copy) and then
-    # shuffled TWICE (the dup-detection aggregate and the join back).
-    # Two independent xxhash64 draws over the token-array slice replace
-    # it — no string is ever materialized, and the shuffled key is 16
-    # bytes regardless of k. Collision safety: two DIFFERENT shingles
-    # are only conflated if both 64-bit hashes collide — for a corpus
-    # of S shingle occurrences the union-bound probability of ANY such
-    # pair is ~S²/2^129 (< 1e-14 even at S = 10^12, i.e. 100 TB scale)
-    # — the same 128-bit-whp argument as the round-10 md5 attempt,
-    # which lost on MessageDigest CPU; xxhash64 over the slice is
-    # codegen'd and allocation-free. The DuckDB oracle still computes
-    # string-keyed groups, so any collision on real data would fail the
-    # hash check loudly. Hashing the ARRAY (not a joined string) keeps
-    # token boundaries significant: xxhash64 chains each element
-    # through the running hash, so ["a b","c"] and ["a","b c"] (whose
-    # space-joins coincide) land in different chains — boundary
-    # ambiguity is reduced to the same 128-bit collision bound instead
-    # of being a GUARANTEED merge as with join-then-hash.
+    # Shingle identity is the hash pair (h1, h2) of _shingle_key: the
+    # k-token shingle is never materialized as a string, and the shuffled
+    # key is 16 bytes regardless of k.
     occ = t.where(F.size("toks") >= k).select(
         "doc_id",
         F.explode(F.sequence(F.lit(1), F.size("toks") - (k - 1))).alias("pos"),
@@ -910,8 +910,7 @@ def exact_substring_dedup(
     ).select(
         "doc_id",
         "pos",
-        F.xxhash64(F.slice(F.col("toks"), F.col("pos"), k)).alias("h1"),
-        F.xxhash64(F.slice(F.col("toks"), F.col("pos"), k), F.lit(1)).alias("h2"),
+        *_shingle_key(F.slice(F.col("toks"), F.col("pos"), k)),
     )
     # radix-encoded (doc_id, pos) order, guarded: evaluating the
     # encoding for an out-of-radix position is a LOUD runtime error, not

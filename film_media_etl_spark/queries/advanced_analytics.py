@@ -366,9 +366,9 @@ def ext_fuzzy_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Measured alternative, rejected: a 4-segment DOUBLE-match variant
     (pigeonhole: 2 edits preserve >= 2 of 4 segments, join on segment
-    PAIRS with the exact shift budget |d1|+|d2-d1|+|delta-d2| <= tau;
-    tools/passjoin4_proto.py) produces identical output but runs 4-7x
-    slower at every scale (72.3s vs 10.8s on the 16x corpus): the
+    PAIRS with the exact shift budget |d1|+|d2-d1|+|delta-d2| <= tau)
+    produces identical output but runs 4-7x slower at every scale
+    (72.3s vs 10.8s on the 16x corpus): the
     probe-side enumeration grows ~10x while segment pairs drawn from
     copy-blind word interiors still collide, so the candidate reduction
     never pays for the enumeration. Map-side bounded levenshtein is

@@ -301,14 +301,12 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     # genuinely materializes these before the fold columns consume them.
     b = base.withColumn("_ga", F.explode(F.array(_rep_arrays(F.col("toks")))))
     cols = _signal_cols(F.col("toks"), F.col("lines"), F.col("paras"), F.col("_ga"))
-    # SECOND barrier for the signal values themselves (optimization
-    # round 11): every signal expression is consumed TWICE — as an
-    # output column and inside the passes_repetition AND-chain — and
-    # CollapseProject inlines projection-defined columns into each
-    # consumer, so the report re-ran all 13 folds. Materializing the
-    # signal struct once halves the fold work (same trap, same cure as
-    # the gram arrays above; measured full-query min 4.63 -> 2.06s on
-    # one window at sf0.1).
+    # SECOND barrier for the signal values themselves: every signal
+    # expression is consumed TWICE — as an output column and inside the
+    # passes_repetition AND-chain — and CollapseProject inlines
+    # projection-defined columns into each consumer, which would re-run
+    # all 13 folds. Materializing the signal struct once halves the fold
+    # work (same trap, same cure as the gram arrays above).
     sig = generate_barrier(
         b, _sig=F.struct(*[c.alias(name) for name, c in cols.items()])
     )

@@ -270,16 +270,18 @@ def ext_quantile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ntile WITHOUT the single-partition global sort: ntile(k) is a pure
     # function of (global rank, N) — the first N%k tiles take N//k+1 rows,
     # the rest N//k — so a parallel global row index (bucketed range sort,
-    # see etl.star._global_index) plus one COUNT reproduces it exactly at
-    # any parallelism. Rank ties cannot occur (o_orderkey tiebreak).
-    from ..etl.star import _global_index
+    # see etl.star._global_index) plus N reproduces it exactly at any
+    # parallelism; N is the total the index stats already count. Rank
+    # ties cannot occur (o_orderkey tiebreak).
+    from ..etl.star import _global_index, prepare_global_index
 
-    n = o.select("o_orderkey").count()
-    q, rem = divmod(n, 10)
+    stats = prepare_global_index(o.select("o_totalprice"), "o_totalprice")
+    q, rem = divmod(stats[3], 10)
     idx = _global_index(
         o.select("o_totalprice", "o_orderkey"),
         ["o_totalprice", "o_orderkey"],
         "o_totalprice",
+        stats,
         out_col="_idx",
     )
     pivot = rem * (q + 1)

@@ -82,11 +82,12 @@ def test_token_count_matches_model(spark):
 
 def test_global_index_matches_row_number_model(spark):
     """_global_index == ROW_NUMBER() OVER (ORDER BY ...) for arbitrary
-    skewed key distributions, with and without a narrow stats_df —
-    including duplicate full rows and empty buckets."""
+    skewed key distributions, with stats collected from the full frame
+    or from a key-only projection — including duplicate full rows and
+    empty buckets."""
     from pyspark.sql import Window
 
-    from film_media_etl_spark.etl.star import _global_index
+    from film_media_etl_spark.etl.star import _global_index, prepare_global_index
 
     rng = random.Random(SEED)
     rows = []
@@ -100,7 +101,9 @@ def test_global_index_matches_row_number_model(spark):
 
     got = {
         tuple(r[:3]): r[3]
-        for r in _global_index(df, order, "k", nbuckets=7, out_col="idx")
+        for r in _global_index(
+            df, order, "k", prepare_global_index(df, "k", nbuckets=7), out_col="idx"
+        )
         .groupBy("k", "sub", "tag")
         .agg(F.sort_array(F.collect_list("idx")).alias("idxs"))
         .select("k", "sub", "tag", "idxs")
@@ -116,15 +119,15 @@ def test_global_index_matches_row_number_model(spark):
     }
     assert got == want
 
-    # narrow stats_df path: same distribution given as a key-only frame
-    stats = df.select("k")
+    # narrow stats: same distribution given as a key-only frame
+    stats = prepare_global_index(df.select("k"), "k", nbuckets=7)
     got2 = (
-        _global_index(df, order, "k", nbuckets=7, out_col="idx", stats_df=stats)
+        _global_index(df, order, "k", stats, out_col="idx")
         .agg(F.min("idx"), F.max("idx"), F.count_distinct("idx"))
         .first()
     )
     n = df.count()
-    assert tuple(got2) == (1, n, n)
+    assert tuple(got2) == (1, n, n) and stats[3] == n
 
 
 def test_global_index_invariant_to_nbuckets(spark):
@@ -134,7 +137,7 @@ def test_global_index_invariant_to_nbuckets(spark):
     reproduce the nbuckets=64 index bit-identically."""
     import random
 
-    from film_media_etl_spark.etl.star import _global_index
+    from film_media_etl_spark.etl.star import _global_index, prepare_global_index
 
     rng = random.Random(20260814)
     rows = [
@@ -149,7 +152,9 @@ def test_global_index_invariant_to_nbuckets(spark):
     def index_with(nb):
         return sorted(
             (r["k"], r["sub"], r["idx"])
-            for r in _global_index(df, order, "k", nbuckets=nb, out_col="idx").collect()
+            for r in _global_index(
+                df, order, "k", prepare_global_index(df, "k", nbuckets=nb), out_col="idx"
+            ).collect()
         )
 
     assert index_with(509) == index_with(64)
@@ -163,8 +168,29 @@ def test_prepare_global_index_empty_input(spark):
 
     empty = spark.range(0).select(F.col("id").alias("k"))
     assert prepare_global_index(empty, "k") == (0, 1, {}, 0)
-    out = _global_index(empty, ["k"], "k", out_col="idx")
+    out = _global_index(empty, ["k"], "k", prepare_global_index(empty, "k"), out_col="idx")
     assert out.columns == ["k", "idx"] and out.count() == 0
+
+
+def test_global_index_null_leading_key_keeps_row(spark):
+    """A NULL leading key is a contract violation that must degrade
+    visibly, not silently: the row is kept with a NULL index, and the
+    non-NULL rows still index densely from 1 (NULLs are not counted)."""
+    from film_media_etl_spark.etl.star import _global_index, prepare_global_index
+
+    df = spark.createDataFrame(
+        [(3, "a"), (None, "b"), (1, "c"), (None, "d"), (2, "e")], "k long, v string"
+    )
+    stats = prepare_global_index(df, "k", nbuckets=2)
+    assert stats[3] == 3
+    got = {r["v"]: r["idx"] for r in _global_index(df, ["k", "v"], "k", stats, out_col="idx").collect()}
+    assert got == {"a": 3, "b": None, "c": 1, "d": None, "e": 2}
+
+    nulls = df.where(F.col("k").isNull())
+    null_stats = prepare_global_index(nulls, "k")
+    assert null_stats == (0, 1, {}, 0)
+    out = _global_index(nulls, ["k", "v"], "k", null_stats, out_col="idx").collect()
+    assert len(out) == 2 and all(r["idx"] is None for r in out)
 
 
 def test_charlm_unicode_corpus_oracle_parity(spark, tmp_path):
@@ -1921,6 +1947,26 @@ def test_exact_substring_dedup_radix_guard(spark):
     }
     assert small == default
     assert small[1][0] == 7  # the pasted passage removed from doc 1
+
+
+def test_exact_substring_shingle_key_is_two_draws(spark):
+    """The shingle key's h2 is its own xxhash64 chain, not the chained
+    value xxhash64(shingle, 1) (= h1 re-hashed with 1), which is a pure
+    function of h1 and would make the (h1, h2) pair a 64-bit key."""
+    from film_media_etl_spark.operators.dedup import _shingle_key
+
+    rng = random.Random(SEED)
+    arrays = [
+        [rng.choice(["a", "b", "c", "the", "a b", ""]) for _ in range(rng.randint(1, 8))]
+        for _ in range(200)
+    ]
+    df = spark.createDataFrame([(i, a) for i, a in enumerate(arrays)], "i int, s array<string>")
+    rows = df.select(
+        *_shingle_key(F.col("s")), F.xxhash64(F.col("s"), F.lit(1)).alias("chained")
+    ).collect()
+    assert all(r["h2"] != r["chained"] and r["h2"] != r["h1"] for r in rows)
+    # equal shingles still share the key; distinct shingles do not
+    assert len({(r["h1"], r["h2"]) for r in rows}) == len({tuple(a) for a in arrays})
 
 
 def test_gopher_battery_each_rule_fires(spark):

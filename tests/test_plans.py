@@ -10,7 +10,6 @@ import re
 
 from conftest import PARITY_SF_DIR, spark_conf
 
-from film_media_etl_spark.etl.star import build_fact_sales
 from film_media_etl_spark.plans import (
     assert_broadcast_join,
     assert_no_cartesian,
@@ -46,30 +45,6 @@ def test_snowflake_join_broadcasts_dims(spark):
     df = _q("op14_multiway_inner_join", spark)
     assert_broadcast_join(df, 2)  # nation and region ride broadcast
     assert_no_cartesian(df)
-
-
-def test_fact_build_is_parallel_and_broadcast(spark):
-    fact = build_fact_sales(spark, PARITY_SF_DIR)
-    s = plan_summary(fact)
-    # dim lookups are broadcast hash joins (reference's per-row which()
-    # loops, ` loadAnalyticsAB...R`:469-480, must not become shuffles)
-    assert s["broadcast_hash_joins"] >= 5
-    assert s["cartesian_products"] == 0
-    # the fact's own lineage must never collapse to a single partition;
-    # every SinglePartition exchange allowed here carries a BOUNDED
-    # frame: the location dim's surrogate window, the date-range 1-row
-    # aggregate, the film-count 1-row aggregate, and — since the lazy
-    # _global_index (optimization round 10) — each index's 1-row
-    # key-bounds aggregate and <=nbuckets-row offsets window (4 indexes
-    # inline: fact, film, music, product). None of them grows with the
-    # corpus; the corpus-sized fact rows themselves stay on nbuckets
-    # partitions (the bucketed window). EXACT count (round-11 advice:
-    # a raised ceiling could hide one corpus-sized collapse inside the
-    # budget — the equality can't): 4 bounds aggregates + 4 offsets
-    # windows + location's dim window + dim_date's range aggregate +
-    # film-count aggregate + the MTD offsets frame's two tiny windows
-    # and total aggregate = 14, every one over a bounded frame.
-    assert s["single_partition_exchanges"] == 14
 
 
 def test_topk_is_takeordered_not_full_sort(spark):
@@ -417,25 +392,6 @@ def test_anomaly_mad_stats_broadcast(spark):
     df = _q("ext_anomaly_mad", spark)
     assert_broadcast_join(df, 2)
     assert_no_cartesian(df)
-
-
-def test_bm25_topk_and_pruned_scan(spark):
-    """Top-20 must plan as TakeOrderedAndProject (distributed top-k, no
-    global sort). The documents scan lives in the checkpointed per-doc
-    frame's lineage (round-11 map-side rewrite), so its (doc_id, text)
-    pruning is pinned on that frame; the outer plan must show ZERO
-    corpus-keyed exchanges — scoring is map-side over the checkpoint
-    plus one 1-row broadcast."""
-    from film_media_etl_spark.plans import physical_plan
-    from film_media_etl_spark.queries.retail_analytics import _bm25_per_doc
-    from film_media_etl_spark.sources import load_table
-
-    df = _q("ext_bm25_search", spark)
-    plan = physical_plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange hashpartitioning" not in plan
-    per_doc = _bm25_per_doc(load_table(spark, PARITY_SF_DIR, "documents"))
-    assert_read_schema_pruned(per_doc, "documents", 2)
 
 
 def test_decay_popularity_jvm_only_single_agg(spark):
