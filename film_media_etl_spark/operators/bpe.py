@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .unigram import word_counts, word_counts_per_doc
+
 
 def _merge_pair_expr(col, left: str, right: str):
     """Greedy leftmost application of one merge to a symbol array:
@@ -102,12 +104,7 @@ def learn_bpe_merges(
     exact."""
     import pandas as pd
 
-    words = (
-        docs.select(F.explode(F.split(F.lower(text_col), " ")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    words = word_counts(docs, text_col=text_col)
     if min_count > 1:
         words = words.where(F.col("n") >= min_count)
 
@@ -169,15 +166,7 @@ def apply_bpe_merges(docs: DataFrame, merges, *, text_col: str = "text", id_col:
     folds stay separate codegen'd projections instead of one collapsed
     expression that would blow the 64KB JVM method limit. Docs with
     null/empty text keep (0, 0) via the left join, never NULL."""
-    wpd = (
-        docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(text_col), " ")).alias("w"),
-        )
-        .where(F.col("w") != "")
-        .groupBy(id_col, "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    wpd = word_counts_per_doc(docs, text_col=text_col, id_col=id_col)
     lens = wpd.select("w").distinct().select("w", F.split("w", "").alias("syms"))
     for left, right, _ in merges:
         lens = lens.select(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import shingles, token_hashes, token_set, tokens
 from ..sources import ensure_parallelism
 
 
@@ -36,32 +37,38 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def _token_set(text: Column) -> Column:
-    return F.array_distinct(F.split(F.lower(text), " "))
-
-
-def _shingle_set_from_toks(toks: Column, n: int) -> Column:
-    """Distinct word n-gram shingles from a token-array column, as
-    space-joined strings. Documents shorter than n tokens yield an
-    empty set — the explicit guard matters because F.sequence(1, 0)
-    would generate a DESCENDING sequence, not an empty one. Callers
-    that consume the result per-element downstream should pass a
-    BARRIER-materialized token column (functions.text.generate_barrier)
-    so the split isn't re-evaluated per shingle."""
-    starts = F.sequence(F.lit(0), F.size(toks) - F.lit(n))
-    # slice+array_join, NOT n separate F.get()+concat_ws: one bounds-checked
-    # array copy per shingle instead of n element lookups — measured 5.8x
-    # faster building 8-gram shingles over the sf0.1 corpus
-    mk = lambda i: F.array_join(F.slice(toks, i + F.lit(1), n), " ")  # noqa: E731
-    return F.when(F.size(toks) >= n, F.array_distinct(F.transform(starts, mk))).otherwise(
-        F.array().cast("array<string>")
+def _set_jaccard_pairs(
+    t: DataFrame, block_cols: tuple[str, ...], threshold: float
+) -> DataFrame:
+    """Exact set-Jaccard self-join of ``t`` = (doc_id, *block_cols, s)
+    within blocks: pairs (doc_id_a < doc_id_b) with J(s_a, s_b) >=
+    threshold. jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) — integer set
+    sizes, one double division: bit-identical in any engine."""
+    a, b = t.alias("a"), t.alias("b")
+    cond = F.col(f"a.{block_cols[0]}") == F.col(f"b.{block_cols[0]}")
+    for c in block_cols[1:]:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
+    # Complete size prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
+    # pairs whose set sizes already violate the threshold skip the
+    # expensive intersection entirely. Joins on cheap int compares
+    # BEFORE any array op runs.
+    sza, szb = F.size(F.col("a.s")), F.size(F.col("b.s"))
+    cond = cond & (
+        F.least(sza, szb).cast("double")
+        >= F.lit(threshold) * F.greatest(sza, szb).cast("double")
     )
-
-
-def _shingle_set(text: Column, n: int) -> Column:
-    """Distinct word n-gram shingles of a text column (lowercased,
-    space-split) — see _shingle_set_from_toks."""
-    return _shingle_set_from_toks(F.split(F.lower(text), " "), n)
+    inter = F.size(F.array_intersect(F.col("a.s"), F.col("b.s")))
+    union = sza + szb - inter
+    return (
+        a.join(b, cond)
+        .select(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
+            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
 
 
 def token_jaccard_pairs(
@@ -72,39 +79,11 @@ def token_jaccard_pairs(
     block_cols: tuple[str, ...] = ("source", "lang"),
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Exact token-set Jaccard similarity join within blocks.
-
-    jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) — integer set sizes, one
-    double division: bit-identical in any engine.
-    """
-    docs = ensure_parallelism(docs)
-    t = docs.select(
-        F.col(id_col).alias("doc_id"), *block_cols, _token_set(F.col(text_col)).alias("toks")
+    """Exact token-set Jaccard similarity join within blocks."""
+    t = ensure_parallelism(docs).select(
+        F.col(id_col).alias("doc_id"), *block_cols, token_set(text_col).alias("s")
     )
-    a, b = t.alias("a"), t.alias("b")
-    cond = (F.col(f"a.{block_cols[0]}") == F.col(f"b.{block_cols[0]}"))
-    for c in block_cols[1:]:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
-    # Complete size prefilter (see ngram_jaccard_pairs): skip the
-    # intersection when set sizes alone rule the threshold out.
-    sza, szb = F.size(F.col("a.toks")), F.size(F.col("b.toks"))
-    cond = cond & (
-        F.least(sza, szb).cast("double")
-        >= F.lit(threshold) * F.greatest(sza, szb).cast("double")
-    )
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.col("a.toks")) + F.size(F.col("b.toks")) - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            jac.alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _set_jaccard_pairs(t, block_cols, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -122,35 +101,10 @@ def ngram_jaccard_pairs(
     with the same vocabulary but different word order share tokens, not
     n-grams — the standard sharpening for near-dup detection. Same
     blocked-join shape (and 100 TB posture) as token_jaccard_pairs."""
-    docs = ensure_parallelism(docs)
-    t = docs.select(
-        F.col(id_col).alias("doc_id"), *block_cols, _shingle_set(F.col(text_col), n).alias("sh")
+    t = ensure_parallelism(docs).select(
+        F.col(id_col).alias("doc_id"), *block_cols, shingles(tokens(text_col), n).alias("s")
     )
-    a, b = t.alias("a"), t.alias("b")
-    cond = F.col(f"a.{block_cols[0]}") == F.col(f"b.{block_cols[0]}")
-    for c in block_cols[1:]:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
-    # Complete size prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
-    # pairs whose set sizes already violate the threshold skip the
-    # expensive intersection entirely. Joins on cheap int compares
-    # BEFORE any array op runs.
-    sza, szb = F.size(F.col("a.sh")), F.size(F.col("b.sh"))
-    cond = cond & (
-        F.least(sza, szb).cast("double")
-        >= F.lit(threshold) * F.greatest(sza, szb).cast("double")
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _set_jaccard_pairs(t, block_cols, threshold)
 
 
 # Vocabulary cap for the bitset verify fast path. 4096 distinct tokens ->
@@ -248,7 +202,7 @@ def minhash_signature(text: Column, *, num_hashes: int) -> Column:
     the persisted dedup index (operators/dedup_index.py), so the two
     paths cannot drift — the index-probe parity test depends on it."""
     _max_long = (1 << 63) - 1
-    th = F.transform(_token_set(text), lambda t: F.xxhash64(t))
+    th = token_hashes(text)
     seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     return F.aggregate(
         th,
@@ -280,7 +234,7 @@ def minhash_banded(
     sig = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.size(_token_set(F.col(text_col))).alias("nt"),
+            F.size(token_set(text_col)).alias("nt"),
             F.explode(F.array(minhash_signature(F.col(text_col), num_hashes=num_hashes))).alias("mhs"),
         )
         # empty token set -> untouched init slots; drop (they would all
@@ -402,9 +356,7 @@ def minhash_lsh_pairs(
     # cheaper on the verify stage). Open text vocabularies take the
     # array_intersect fallback — that is the expected 100 TB path, and
     # the probe costs one map-side-combined count-distinct scan.
-    tok_hashes = F.array_distinct(
-        F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
-    )
+    tok_hashes = F.array_distinct(token_hashes(text_col))
     ph = _perfect_hash_plan(docs, tok_hashes)
     if ph is not None:
         seed, nwords = ph
@@ -489,8 +441,7 @@ def minhash_lsh_pairs(
 def simhash_bits(text: Column, *, nbits: int = 64) -> Column:
     """64-bit SimHash of the token set: bit j of the signature is the sign
     of sum over tokens of (+1 if bit j of xxhash64(token) else -1)."""
-    toks = _token_set(text)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    hashes = token_hashes(text)
     # bit masks as signed-64 literals (bit 63 is the sign bit in two's complement)
     masks = [(1 << j) if j < 63 else -(1 << 63) for j in range(nbits)]
     def _merge_for(m: int):
@@ -505,18 +456,9 @@ def simhash_bits(text: Column, *, nbits: int = 64) -> Column:
     return sig
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 6,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup: block on exact match of one of 4 16-bit bands
-    (any pair within Hamming<=3 of the 64-bit sig must agree on >=1 band;
-    wider max_hamming trades recall), verify bit_count(xor) <= k."""
-    docs = ensure_parallelism(docs)
+def _simhash_banded(docs: DataFrame, id_col: str, text_col: str, bands: int) -> DataFrame:
+    """(doc_id, sig, band, bval): one row per doc per 64/bands-bit
+    signature band — the SimHash blocking representation."""
     sig = docs.select(
         F.col(id_col).alias("doc_id"), simhash_bits(F.col(text_col)).alias("sig")
     )
@@ -531,9 +473,24 @@ def simhash_near_dup_pairs(
             for b in range(bands)
         ]
     )
-    banded = sig.select("doc_id", "sig", F.explode(band_arr).alias("bb")).select(
+    return sig.select("doc_id", "sig", F.explode(band_arr).alias("bb")).select(
         "doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval")
     )
+
+
+def simhash_near_dup_pairs(
+    docs: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 6,
+    bands: int = 4,
+) -> DataFrame:
+    """SimHash near-dup: block on exact match of one of 4 16-bit bands
+    (any pair within Hamming<=3 of the 64-bit sig must agree on >=1 band;
+    wider max_hamming trades recall), verify bit_count(xor) <= k."""
+    docs = ensure_parallelism(docs)
+    banded = _simhash_banded(docs, id_col, text_col, bands)
     pairs = (
         banded.alias("a")
         .join(
@@ -690,9 +647,8 @@ def minhash_lsh_survivors(
     docs = ensure_parallelism(docs)
     rows = num_hashes // bands
     _max_long = (1 << 63) - 1
-    th = F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
     sig_arr = minhash_signature(F.col(text_col), num_hashes=num_hashes)
-    tok_hashes = F.array_distinct(th)
+    tok_hashes = F.array_distinct(token_hashes(text_col))
     sig = docs.select(
         F.col(id_col).alias("doc_id"),
         tok_hashes.alias("toks"),
@@ -777,23 +733,7 @@ def simhash_survivors(
     O(pairs), and no first-band dedup or distinct() is needed (EXISTS is
     idempotent across bands)."""
     docs = ensure_parallelism(docs)
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"), simhash_bits(F.col(text_col)).alias("sig")
-    )
-    width = 64 // bands
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sig"), b * width).bitwiseAND(F.lit(mask)).alias("bval"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select("doc_id", "sig", F.explode(band_arr).alias("bb")).select(
-        "doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval")
-    )
+    banded = _simhash_banded(docs, id_col, text_col, bands)
     pruned = (
         banded.alias("b")
         .join(
@@ -896,7 +836,7 @@ def exact_substring_dedup(
     span itself, exactly. Reference kin: dedup-on-load (etl:69-77)
     dedups whole rows; this is its intra-document, token-level big
     sibling."""
-    toks = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " ")
+    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
     t = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc_id"), toks.alias("toks")
     )

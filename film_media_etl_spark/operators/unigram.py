@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 MAX_PIECE_LEN = 6
 VOCAB_SIZE = 64  # multi-char pieces kept (plus full character coverage)
 _LOGP_DEC = "decimal(20,6)"
@@ -56,7 +58,7 @@ _LOGP_DEC = "decimal(20,6)"
 def word_counts(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(w, n): the deduplicated word vocabulary with counts."""
     return (
-        docs.select(F.explode(F.split(F.lower(text_col), " ")).alias("w"))
+        docs.select(F.explode(tokens(text_col)).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -218,15 +220,15 @@ def viterbi_word_segments(words: DataFrame, pieces: DataFrame) -> DataFrame:
 def word_counts_per_doc(
     docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, w, cnt): per-document word counts — the one corpus-sized
-    tokenization of the unigram pipeline. Callers that also need the
-    corpus vocabulary derive it with a narrow second aggregate
-    (groupBy(w).sum(cnt)) instead of re-exploding the corpus — see
-    ext_unigram_tokenize (optimization round 10)."""
+    """(id, w, cnt): per-document word counts. Callers that also need
+    the corpus vocabulary derive it with a narrow second aggregate
+    (groupBy(w).sum(cnt)) instead of a second word_counts spelling — see
+    ext_unigram_tokenize. The frame is a plan, not a cache: every
+    consumer of it scans and tokenizes the corpus again."""
     return (
         docs.select(
             F.col(id_col),
-            F.explode(F.split(F.lower(text_col), " ")).alias("w"),
+            F.explode(tokens(text_col)).alias("w"),
         )
         .where(F.col("w") != "")
         .groupBy(id_col, "w")

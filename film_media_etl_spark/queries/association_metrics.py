@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import load_table
 from .registry import register
 
@@ -72,7 +73,7 @@ def ext_term_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts."""
     docs = load_table(spark, sf_dir, "documents")
     pres = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).distinct()
     df = pres.groupBy("term").agg(F.count(F.lit(1)).alias("n_t"))
     w = Window.orderBy(F.desc("n_t"), F.asc("term"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -267,7 +268,7 @@ def kn_model_parts(docs: DataFrame):
     (w1, w2, logp) model table, and the per-context totals."""
     t = (
         docs.where(F.col("text").isNotNull())
-        .select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+        .select("doc_id", tokens("text").alias("toks"))
         .where(F.size("toks") >= 2)
     )
     n = F.size("toks")

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import load_table
 from .registry import register
 
@@ -54,7 +55,7 @@ def ext_token_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject). Counting is exact; ties break on the
     bigram string."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split(F.lower("text"), " ").alias("ts")).where(
+    toks = docs.select(tokens("text").alias("ts")).where(
         F.size("ts") >= 2
     )
     bg = toks.select(

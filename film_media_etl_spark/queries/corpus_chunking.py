@@ -67,7 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import generate_barrier
+from ..functions.text import generate_barrier, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -119,7 +119,7 @@ def boilerplate_lines(
     proxy) is boilerplate iff it occurs in >= min_df DISTINCT documents;
     every occurrence is dropped and the document reassembled from the
     survivors in order."""
-    t = docs.select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    t = docs.select("doc_id", tokens("text").alias("toks"))
     n = F.size("toks")
     nc = F.greatest(F.lit(1), F.ceil(n / F.lit(float(line_toks))).cast("int"))
     lines = t.select(

@@ -41,8 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import shingles, tokens
 from ..operators.bloom import bloom_build, bloom_contains
-from ..operators.dedup import _shingle_set
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -219,7 +219,7 @@ def ngram_diversity(docs: DataFrame) -> DataFrame:
     Spark's partial-distinct map side, so the exchange carries distinct
     grams, never gram occurrences."""
     t = docs.select(
-        "doc_id", "source", F.split(F.lower("text"), " ").alias("toks")
+        "doc_id", "source", tokens("text").alias("toks")
     )
     n = F.size("toks")
     tg_len = F.greatest(n - 2, F.lit(0))
@@ -320,7 +320,7 @@ def bloom_flag_docs(docs: DataFrame) -> DataFrame:
     sh = docs.select(
         "doc_id",
         "source",
-        _shingle_set(F.col("text"), _DECON_SHINGLE_N).alias("grams"),
+        shingles(tokens("text"), _DECON_SHINGLE_N).alias("grams"),
     )
     eval_keys = sh.where(F.col("doc_id") < _EVAL_MAX_ID).select(
         F.explode("grams").alias("g")

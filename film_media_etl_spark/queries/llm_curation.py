@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import shingles, tokens
 from ..functions.vectors import cosine, oracle_cosine, to_double_vec
-from ..operators.dedup import _shingle_set
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -147,7 +147,7 @@ def ext_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the final per-source aggregate exchanges."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     sh = docs.select(
-        "doc_id", "source", _shingle_set(F.col("text"), _SHINGLE_N).alias("grams")
+        "doc_id", "source", shingles(tokens("text"), _SHINGLE_N).alias("grams")
     )
     eval_grams = (
         sh.where(F.col("doc_id") < 10)
@@ -344,7 +344,7 @@ def ext_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ext_dedup_exact — repeated boilerplate dies corpus-wide even
     when full documents differ."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    t = docs.select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    t = docs.select("doc_id", tokens("text").alias("toks"))
     n = F.size("toks")
     nc = F.greatest(F.lit(1), F.ceil(n / F.lit(float(_PARA))).cast("int"))
     chunks = t.select(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -38,6 +39,20 @@ def _bucket_expr(key_sql: str) -> str:
         for i in range(6)
     )
     return f"(({nibbles}) % {_N_BUCKETS})"
+
+
+def _doc_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, term): one row per non-empty token occurrence."""
+    return docs.select(
+        "doc_id", F.explode(tokens("text")).alias("term")
+    ).where(F.col("term") != "")
+
+
+def _hashed_tf(docs: DataFrame) -> DataFrame:
+    """(doc_id, bucket, tf): term frequencies hashed into _N_BUCKETS."""
+    return _doc_terms(docs).groupBy(
+        "doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("tf"))
 
 
 @register(
@@ -64,12 +79,7 @@ def ext_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 nibble-fold, so the featurization is reproducible across
     engines and replays."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
-    ).where(F.col("term") != "")
-    return tok.groupBy(
-        "doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("tf"))
+    return _hashed_tf(docs)
 
 
 @register(
@@ -231,12 +241,7 @@ def ext_linear_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     last ulp between the JVM and DuckDB. Docs with no features (empty
     text) keep the bias via the left join, so every input row scores."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
-    ).where(F.col("term") != "")
-    feat = tok.groupBy(
-        "doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("tf"))
+    feat = _hashed_tf(docs)
     weights = spark.range(_N_BUCKETS).select(
         F.col("id").cast("int").alias("bucket"),
         ((F.col("id") * 37) % 21 - 10).cast("long").alias("w"),
@@ -365,11 +370,12 @@ def ext_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # ONE corpus tokenization (optimization round 10): the per-doc word
-    # counts feed the tokenizer, and the vocab's (w, n) frame derives
-    # from them with a narrow groupBy(w) aggregate — the former
-    # spelling exploded and aggregated the corpus a second time inside
-    # build_unigram_vocab's word_counts.
+    # One per-doc word-count frame feeds both stages: the vocab's (w, n)
+    # frame derives from it with a narrow groupBy(w) aggregate instead of
+    # a second word_counts spelling. The frame is not cached, so each of
+    # its three consumers (vocab, distinct words, per-doc totals) still
+    # scans and tokenizes the corpus in the executed plan — three
+    # tokenizing scans, pinned by tests/test_plan_pins.py.
     wpd = word_counts_per_doc(docs)
     wc = wpd.groupBy("w").agg(F.sum("cnt").cast("long").alias("n"))
     pieces = build_unigram_vocab(docs, words=wc)
@@ -441,11 +447,8 @@ def ext_linear_gradient_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-planable. Integer headroom: |r| <= ~10 x tokens + y, so the
     gradient sum stays inside BIGINT past 10^9 documents."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
-    ).where(F.col("term") != "")
     feat = (
-        tok.select("doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket"))
+        _doc_terms(docs).select("doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket"))
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )

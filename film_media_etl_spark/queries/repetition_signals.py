@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -287,7 +288,7 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     from ..functions.text import generate_barrier
 
     txt = F.coalesce(F.col("text"), F.lit(""))
-    toks = F.split(F.lower(txt), " ")
+    toks = tokens(txt)
     base = ensure_parallelism(docs).select(
         "doc_id",
         toks.alias("toks"),
@@ -344,7 +345,7 @@ def with_repetition_verdict(
     txt = F.coalesce(F.col(text_col), F.lit(""))
     pre = df.select(
         "*",
-        F.split(F.lower(txt), " ").alias("_rtoks"),
+        tokens(txt).alias("_rtoks"),
         F.split(txt, "\n").alias("_rlines"),
         F.split(txt, "\n\n").alias("_rparas"),
     )

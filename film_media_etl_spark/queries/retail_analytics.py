@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import AGG_DECIMAL, dec
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -426,7 +427,7 @@ def _bm25_per_doc(docs: DataFrame) -> DataFrame:
 
     return generate_barrier(
         docs.where(F.col("text").isNotNull()).select("doc_id", "text"),
-        toks=F.split(F.lower("text"), " "),
+        toks=tokens("text"),
     ).select(
         "doc_id",
         F.size("toks").cast("long").alias("dl"),

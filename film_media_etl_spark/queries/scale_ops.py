@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators.skew import salted_aggregate
 from ..sources import ensure_parallelism, load_table
 from .registry import register
@@ -394,7 +395,7 @@ def ext_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only top-k tokens joined against the tiny grid."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
-        F.explode(F.split(F.lower("text"), " ")).alias("w")
+        F.explode(tokens("text")).alias("w")
     ).where(F.col("w") != "")
     cells = cms_cells(toks)
     truth = (

@@ -34,6 +34,7 @@ from ..functions.text import (
     oracle_gopher_reason,
     oracle_predicted_lang,
     oracle_quality_score,
+    tokens,
 )
 from .repetition_signals import oracle_repetition_verdict_subquery
 from ..functions.vectors import dot, l2sq, oracle_dot, oracle_l2sq, to_double_vec
@@ -311,7 +312,7 @@ def ext_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (charlm.py convention)."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     tk = ensure_parallelism(docs).select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok")
+        "doc_id", "lang", F.explode(tokens("text")).alias("tok")
     )
     # BOTH unigram models in one pass: conditional count for the target
     # inside the raw count's aggregate — one corpus explode+shuffle
@@ -578,7 +579,7 @@ def curation_verdict(
             "doc_id",
             "text",
             "blk_reason",
-            F.split(F.lower("text"), " ").alias("toks"),
+            tokens("text").alias("toks"),
         )
     ).select("doc_id", "text", "toks", "blk_reason", "lang", "q")
     # with_repetition_verdict adds its own barrier for the 9 gram arrays

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import token_count
 from ..sources import ensure_parallelism, load_table
 from .llm_curation import _uniform_expr
 from .registry import register
@@ -57,7 +58,7 @@ def _keyed(docs: DataFrame, n_shards: int, seed: str) -> DataFrame:
     key_sql = f"('shard:{seed}:' || CAST(doc_id AS STRING))"
     shard_sql = f"CAST(floor({_uniform_expr(key_sql)} * {n_shards}) AS INT)"
     n_toks = F.when(F.col("text").isNull(), F.lit(0)).otherwise(
-        F.size(F.split(F.lower("text"), " "))
+        token_count("text")
     )
     return docs.select(
         "doc_id",

@@ -36,8 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import generate_barrier
-from ..operators.dedup import _shingle_set_from_toks
+from ..functions.text import generate_barrier, shingles, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -47,16 +46,16 @@ _SHINGLE = 4  # tokens per shingle — matches the blocklist/line-proxy grain
 def source_shingles(docs: DataFrame, *, n: int = _SHINGLE) -> DataFrame:
     """DISTINCT (source, shingle) pairs: every token n-gram each source
     contains, deduplicated with a map-side-combined aggregate. Shingle
-    construction is operators.dedup._shingle_set_from_toks (ONE home
-    for the slice+array_join shingle shape and its short-doc guard);
-    the token array is materialized behind a Generate barrier first
+    construction is functions.text.shingles (ONE home for the
+    slice+array_join shingle shape and its short-doc guard); the token
+    array is materialized behind a Generate barrier first
     (functions.text.generate_barrier) so the split isn't re-evaluated
     per shingle position."""
     step = generate_barrier(
         docs.filter(F.col("text").isNotNull()).select("source", "text"),
-        toks=F.split(F.lower("text"), " "),
+        toks=tokens("text"),
     )
-    grams = _shingle_set_from_toks(F.col("toks"), n)
+    grams = shingles(F.col("toks"), n)
     return step.select("source", F.explode(grams).alias("shingle")).distinct()
 
 

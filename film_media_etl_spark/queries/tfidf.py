@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -61,7 +62,7 @@ def ext_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     n_docs = docs.count()
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import token_hashes, tokens
 from ..operators.dedup import simhash_bits
 
 
@@ -203,7 +204,7 @@ def stream_curation_gate(
         if blocklist_max_expr is None
         else blocklist_max_expr
     )
-    toks = F.split(F.lower("text"), " ")
+    toks = tokens("text")
     n = F.size("toks")
     bgs = F.zip_with(
         F.slice(F.col("toks"), 1, n - 1),
@@ -357,7 +358,7 @@ def start_index_dedup_stream(
     broadcast probe against index scans; nothing corpus-sized shuffles."""
     import os
 
-    from ..operators.dedup import minhash_lsh_survivors, _token_set as _toks
+    from ..operators.dedup import minhash_lsh_survivors
     from ..operators.dedup_index import (
         minhash_banded,
         probe_dedup_frames,
@@ -390,7 +391,7 @@ def start_index_dedup_stream(
         minhash_banded(batch_df).write.mode("overwrite").parquet(
             os.path.join(index_dir, "bands", f"v{batch_id}")
         )
-        th = F.array_distinct(F.transform(_toks(F.col("text")), lambda t: F.xxhash64(t)))
+        th = F.array_distinct(token_hashes("text"))
         batch_df.select(
             F.col("doc_id"), th.alias("tok_hashes"), F.size(th).alias("nt")
         ).where(F.col("nt") > 0).write.mode("overwrite").parquet(

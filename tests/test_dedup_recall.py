@@ -16,7 +16,8 @@ tight enough to catch a tuning regression to the old 3x10 banding
 import pytest
 from pyspark.sql import functions as F
 
-from film_media_etl_spark.operators.dedup import _token_set, minhash_lsh_pairs
+from film_media_etl_spark.functions.text import token_hashes
+from film_media_etl_spark.operators.dedup import minhash_lsh_pairs
 from film_media_etl_spark.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -39,9 +40,7 @@ def _exact_pairs(docs):
     fixture scale; this is ground truth, not the scale path."""
     t = docs.select(
         F.col("doc_id"),
-        F.array_distinct(
-            F.transform(_token_set(F.col("text")), lambda x: F.xxhash64(x))
-        ).alias("toks"),
+        F.array_distinct(token_hashes("text")).alias("toks"),
     ).withColumn("nt", F.size("toks"))
     a, b = t.alias("a"), t.alias("b")
     cond = (F.col("a.doc_id") < F.col("b.doc_id")) & (
@@ -355,9 +354,7 @@ def _stage_stream_shaped_index(spark, tmp_path, *, extra_bands_only: bool = Fals
     for v, pred in slices:
         part = docs.where(pred)
         minhash_banded(part).write.parquet(f"{idx}/bands/{v}")
-        th = F.array_distinct(
-            F.transform(_token_set(F.col("text")), lambda t: F.xxhash64(t))
-        )
+        th = F.array_distinct(token_hashes("text"))
         part.select(
             F.col("doc_id"), th.alias("tok_hashes"), F.size(th).alias("nt")
         ).where(F.col("nt") > 0).write.parquet(f"{idx}/sigs/{v}")

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from conftest import PARITY_SF_DIR
 
 from film_media_etl_spark.etl.star import build_fact_sales
@@ -77,3 +78,29 @@ def test_minhash_survivors_semi_join_scans_buckets_by_doc_id(spark):
     ), lines[w]
     between = lines[build:w]
     assert not any(re.search(r"\b(Sort|Exchange)\b", ln) for ln in between), "\n".join(between)
+
+
+# Corpus scans that tokenize, per corpus curation op: the distinct
+# `text` attributes fed to the word split (functions.text.tokens) in the
+# executed plan. Each is one pass over the documents that splits every
+# text. Ceilings, so a new re-tokenizing scan fails here; lowering them
+# is a plan change, not a spelling change.
+_TOKENIZING_SCANS = {
+    "ext_dedup_exact": 0,
+    "ext_dedup_minhash_survivors": 3,
+    "ext_dedup_substring": 3,
+    "ext_repetition_signals": 1,
+    "ext_unigram_tokenize": 3,
+    "ext_curation_pipeline": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TOKENIZING_SCANS))
+def test_tokenizing_scan_census(spark, name):
+    df = _q(name, spark)
+    df.collect()  # finalize AQE
+    plan = physical_plan(df)
+    # the outer plan's Initial Plan marker is the unindented one
+    final = plan[plan.index("== Final Plan =="):plan.index("\n+- == Initial Plan ==")]
+    scans = set(re.findall(r"split\(lower\((?:coalesce\()?text#(\d+)", final))
+    assert len(scans) <= _TOKENIZING_SCANS[name], sorted(scans)

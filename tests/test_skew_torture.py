@@ -18,8 +18,14 @@ from pyspark.sql import functions as F
 
 from conftest import PARITY_SF_DIR, spark_conf
 
-# test-local AQE thresholds: tiny partitions must qualify as "skewed"
+# test-local AQE thresholds: tiny partitions must qualify as "skewed".
+# The shuffle partition count is pinned too: AQE calls a partition skewed
+# only above skewedPartitionFactor x the MEDIAN partition, and with as
+# many partitions as a small host has cores the hot keys can fill most of
+# them (the MinHash test's 5 hot band keys hash to 3 of 4 partitions,
+# so the median partition is itself hot and nothing is split).
 _SKEW_CONF = {
+    "spark.sql.shuffle.partitions": "32",
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16384",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4096",

@@ -1,0 +1,17 @@
+"""Source-level rules: decisions that must be spelled in one module."""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / "film_media_etl_spark"
+
+
+def test_corpus_word_split_is_spelled_only_in_functions_text():
+    """The corpus tokenization (lowercase, then split on single spaces)
+    lives in functions/text.tokens; every other module calls it or one of
+    its derived forms (token_set, token_hashes, shingles)."""
+    hits = sorted(
+        str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if "F.split(F.lower(" in p.read_text()
+    )
+    assert hits == ["functions/text.py"], hits

@@ -9,11 +9,17 @@ session factory the bench uses, so join strategies and exchange counts
 match what the bench times. These files are the optimization round's
 before/after evidence — regenerate the *_after.txt set after the last
 code change of the round.
+
+Expression ids (``#123``), lambda variable suffixes (``lambda x_17``)
+and ``plan_id=N`` are normalized before writing: all three count up per
+session, so without this every line of a before/after pair differs and
+the diff hides the real change.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,6 +32,12 @@ def formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def normalize_plan(plan: str) -> str:
+    for pat, rep in ((r"#\d+", "#N"), (r"(lambda \w+?)_\d+\b", r"\1_N"), (r"plan_id=\d+", "plan_id=N")):
+        plan = re.sub(pat, rep, plan)
+    return plan
 
 
 def main() -> None:
@@ -47,7 +59,7 @@ def main() -> None:
         df = qs[name](spark, SF_DIR)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(formatted_plan(df))
+            f.write(normalize_plan(formatted_plan(df)))
         print(f"wrote {path}")
 
 

@@ -32,16 +32,10 @@ import sys
 
 def child(sf_dir: str, names: list[str]) -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
     from film_media_etl_spark.queries import all_queries
+    from film_media_etl_spark.session import get_spark
+
+    spark = get_spark("codegen-audit", cpus=8)
 
     qs = all_queries()
     todo = names or sorted(qs)

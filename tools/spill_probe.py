@@ -27,6 +27,7 @@ import glob
 import gzip
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -36,35 +37,28 @@ EVENT_DIR = "/tmp/spark-events-spillprobe"
 
 
 def _session(driver_mem: str, mem_fraction: str):
-    from pyspark.sql import SparkSession
-
-    from film_media_etl_spark.session import cpu_count
+    """The engine session (session.get_spark) on a fresh JVM with the
+    probe's static confs: they only take effect at JVM launch, so they
+    go through PYSPARK_SUBMIT_ARGS and the heap through
+    SPARK_GRAFT_DRIVER_MEM."""
+    from film_media_etl_spark.session import get_spark
 
     os.makedirs(EVENT_DIR, exist_ok=True)
-    n = cpu_count()
-    return (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("spill-probe")
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", driver_mem)
+    conf = {
         # squeeze the unified memory region so execution memory runs out
         # early and operators exercise their spill paths
-        .config("spark.memory.fraction", mem_fraction)
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVENT_DIR)
+        "spark.memory.fraction": mem_fraction,
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": EVENT_DIR,
         # single plain-text log named by app id (rolling writes a v2
         # directory the parser would have to chase)
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.eventLog.compress": "false",
+    }
+    args = [x for k, v in conf.items() for x in ("--conf", f"{k}={v}")]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([*args, "pyspark-shell"])
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = driver_mem
+    return get_spark("spill-probe")
 
 
 def _spills_by_stage(log_path: str) -> dict[int, tuple[int, int]]:
