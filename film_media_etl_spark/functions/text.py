@@ -66,8 +66,7 @@ def shingles(toks: Column, n: int) -> Column:
     isn't re-evaluated per shingle."""
     starts = F.sequence(F.lit(0), F.size(toks) - F.lit(n))
     # slice+array_join, NOT n separate F.get()+concat_ws: one bounds-checked
-    # array copy per shingle instead of n element lookups — measured 5.8x
-    # faster building 8-gram shingles over the sf0.1 corpus
+    # array copy per shingle instead of n element lookups
     mk = lambda i: F.array_join(F.slice(toks, i + F.lit(1), n), " ")  # noqa: E731
     return F.when(F.size(toks) >= n, F.array_distinct(F.transform(starts, mk))).otherwise(
         F.array().cast("array<string>")
@@ -607,10 +606,9 @@ def generate_barrier(df, **exprs: Column):
     expensive array/HOF expression consumed per-element downstream must
     cross a Generate to be computed once (the defect class fixed in
     commit c9c5eb7; README "HOF CSE"). Not every barrier goes through
-    here: operators/dedup.py (minhash_banded, minhash_lsh_pairs,
-    minhash_lsh_survivors), dedup_index.py, bpe.py, queries/
-    llm_curation.py and repetition_signals.py still hand-roll the
-    single-column explode(array(...)) form."""
+    here: operators/bpe.py, queries/llm_curation.py and
+    queries/repetition_signals.py still hand-roll the single-column
+    explode(array(...)) form."""
     named = [e.alias(k) for k, e in exprs.items()]
     out = df.withColumn("_gb", F.explode(F.array(F.struct(*named))))
     return out.withColumns(

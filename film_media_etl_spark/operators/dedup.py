@@ -1,21 +1,36 @@
 """Deduplication operators for LLM-training-data pipelines (SURVEY §2.K).
 
-Four tiers, trading exactness against scale:
+Tiers, trading exactness against scale:
 
 1. ``exact_dedup`` — hash group-by on the dedup key. One shuffle; at
    100 TB this is the always-correct baseline (pre-partition by a key
    prefix / bucket the table to make the shuffle map-side).
-2. ``token_jaccard_pairs`` — exact set-similarity join within blocking
-   keys. Quadratic *inside a block*; correct choice when a natural
-   blocking key (source, language, shard) bounds block size.
+2. ``token_jaccard_pairs`` / ``ngram_jaccard_pairs`` — exact
+   set-similarity join within blocking keys. Quadratic *inside a
+   block*; correct choice when a natural blocking key (source,
+   language, shard) bounds block size.
 3. ``minhash_lsh_pairs`` — MinHash signatures + banded LSH: candidate
    generation is linear in corpus size (explode bands -> equi-join on
    band hash), candidates verified with exact Jaccard. The 100 TB path:
    every stage is a plain shuffle-on-key, no pairwise blowup outside
-   hash buckets.
+   hash buckets. ``minhash_lsh_survivors`` is its keep/drop form, and
+   operators/dedup_index.py persists its bands for ingest-time probes.
 4. ``simhash_near_dup_pairs`` — 64-bit SimHash with banded blocking +
    Hamming-distance verification (bit_count(xor) <= k). Cheapest
    signatures; near-dup semantics coarser than MinHash.
+   ``simhash_survivors`` is its keep/drop form.
+5. ``exact_substring_dedup`` — removes duplicated token spans from the
+   documents themselves.
+
+Every banded op (MinHash pairs and survivors, the persisted index, its
+probe and its stream writer, SimHash pairs and survivors, and the pHash
+near-dup query) is built from the banded-LSH core below, which spells
+each decision once: the distinct token-hash set ``th`` and ``nt =
+size(th)`` (_token_hash_sets), the signature frame (_signatures), the
+band rows (_band_rows), the band equi-join (_same_bucket), the
+first-colliding-band gate (_first_band_gate), the size-ratio prune
+(_size_ratio_ok) and the exact Jaccard verify (_jaccard,
+_jaccard_verify).
 
 All pure DataFrame ops — signatures via xxhash64 (JVM), no Python UDFs.
 """
@@ -25,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles, token_hashes, token_set, tokens
+from ..functions.text import generate_barrier, shingles, token_hashes, token_set, tokens
 from ..sources import ensure_parallelism
 
 
@@ -37,35 +52,39 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
+def _size_ratio_ok(na: Column, nb: Column, threshold: float) -> Column:
+    """The size-ratio prune: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so a
+    pair whose set sizes already violate the threshold cannot verify.
+    Integer compares only, so joins run it BEFORE any array op."""
+    return F.least(na, nb).cast("double") >= F.lit(threshold) * F.greatest(na, nb).cast("double")
+
+
+def _jaccard(inter: Column, na: Column, nb: Column) -> Column:
+    """|A ∩ B| / (|A| + |B| - |A ∩ B|) from integer set sizes — one
+    double division, bit-identical in any engine."""
+    return inter.cast("double") / (na + nb - inter).cast("double")
+
+
 def _set_jaccard_pairs(
     t: DataFrame, block_cols: tuple[str, ...], threshold: float
 ) -> DataFrame:
     """Exact set-Jaccard self-join of ``t`` = (doc_id, *block_cols, s)
     within blocks: pairs (doc_id_a < doc_id_b) with J(s_a, s_b) >=
-    threshold. jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) — integer set
-    sizes, one double division: bit-identical in any engine."""
+    threshold."""
     a, b = t.alias("a"), t.alias("b")
     cond = F.col(f"a.{block_cols[0]}") == F.col(f"b.{block_cols[0]}")
     for c in block_cols[1:]:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
-    # Complete size prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
-    # pairs whose set sizes already violate the threshold skip the
-    # expensive intersection entirely. Joins on cheap int compares
-    # BEFORE any array op runs.
     sza, szb = F.size(F.col("a.s")), F.size(F.col("b.s"))
-    cond = cond & (
-        F.least(sza, szb).cast("double")
-        >= F.lit(threshold) * F.greatest(sza, szb).cast("double")
-    )
+    cond = cond & _size_ratio_ok(sza, szb, threshold)
     inter = F.size(F.array_intersect(F.col("a.s"), F.col("b.s")))
-    union = sza + szb - inter
     return (
         a.join(b, cond)
         .select(
             F.col("a.doc_id").alias("doc_id_a"),
             F.col("b.doc_id").alias("doc_id_b"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+            _jaccard(inter, sza, szb).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -107,6 +126,12 @@ def ngram_jaccard_pairs(
     return _set_jaccard_pairs(t, block_cols, threshold)
 
 
+# ---------------------------------------------------------------------------
+# Banded-LSH core
+# ---------------------------------------------------------------------------
+
+_MAX_LONG = (1 << 63) - 1
+
 # Vocabulary cap for the bitset verify fast path. 4096 distinct tokens ->
 # at most a 32768-bit / 512-long bitset (4 KB per doc) before giving up on
 # finding an injective layout; real corpora with open vocabularies exceed
@@ -115,18 +140,36 @@ _BITSET_VOCAB_CAP = 4096
 
 
 # Probe results memoized per (applicationId, plan semantic hash): the
-# vocabulary scan is a full corpus pass (~3.4s at sf0.1) and its result is
-# a pure function of the input plan — repeated builds of the same dedup
-# query (bench reps, pipeline composition) reuse it. Same staleness
-# assumption as etl.star._STAR_CACHE: files under a path don't change
-# within one session.
+# vocabulary scan is a full corpus pass and its result is a pure function
+# of the input plan — repeated builds of the same dedup query (bench
+# reps, pipeline composition) reuse it. Same staleness assumption as
+# etl.star._STAR_CACHE: files under a path don't change within one
+# session.
 _PH_CACHE: dict[tuple[str, int], tuple[int, int] | None] = {}
 
 
-def _perfect_hash_plan(docs: DataFrame, tok_hashes: Column) -> tuple[int, int] | None:
-    """Probe the corpus vocabulary; if bounded, return (seed, nwords) such
-    that ``pmod(xxhash64(h, seed), 64*nwords)`` is INJECTIVE on every
-    distinct token hash — making a bitset-popcount intersection exact.
+def _th(text: Column | str) -> Column:
+    """The distinct token-hash set of ``text``."""
+    return F.array_distinct(token_hashes(text))
+
+
+def _token_hash_sets(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, th, nt): each doc's distinct token-hash set ``th`` and
+    its size ``nt``. Every MinHash op signs, prunes and verifies on
+    ``th``, so the signature, the size-ratio prune and the Jaccard verify
+    all see one set. Hashes keep the token sets' cardinalities up to
+    xxhash64 collisions, and the verify intersect compares longs instead
+    of strings."""
+    return docs.select(
+        F.col(id_col).alias("doc_id"), _th(text_col).alias("th")
+    ).withColumn("nt", F.size("th"))
+
+
+def _perfect_hash_plan(tsets: DataFrame) -> tuple[int, int] | None:
+    """Probe the vocabulary of the ``th`` column of ``tsets``; if
+    bounded, return (seed, nwords) such that ``pmod(xxhash64(h, seed),
+    64*nwords)`` is INJECTIVE on every distinct token hash — making a
+    bitset-popcount intersection exact.
 
     One count-distinct-style job (map-side partial agg, <= cap rows to the
     driver); seed search is driver-side Python over the collected vocab.
@@ -135,8 +178,8 @@ def _perfect_hash_plan(docs: DataFrame, tok_hashes: Column) -> tuple[int, int] |
 
     try:
         key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs.select(tok_hashes.alias("_th")).semanticHash(),
+            tsets.sparkSession.sparkContext.applicationId,
+            tsets.select("th").semanticHash(),
         )
     except Exception:
         key = None
@@ -151,7 +194,7 @@ def _perfect_hash_plan(docs: DataFrame, tok_hashes: Column) -> tuple[int, int] |
         # Python's math-mod of the signed long agree with Spark's pmod.
         n_seeds = 16
         probe = (
-            docs.select(SF.explode(tok_hashes).alias("h"))
+            tsets.select(SF.explode("th").alias("h"))
             .distinct()
             .select(
                 *[SF.xxhash64(SF.col("h"), SF.lit(s)).alias(f"s{s}") for s in range(n_seeds)]
@@ -178,36 +221,114 @@ def _perfect_hash_plan(docs: DataFrame, tok_hashes: Column) -> tuple[int, int] |
     return result
 
 
-def minhash_signature(text: Column, *, num_hashes: int) -> Column:
-    """array<long> MinHash signature of the text's token set, built
-    WITHOUT an explode+groupBy shuffle and with the token set evaluated
-    ONCE: a single aggregate() walks the token-hash array carrying all
-    num_hashes slot minima (acc[i] = min(acc[i], xxhash64(h, i))). One
-    expression matters: higher-order functions are excluded from codegen
-    subexpression elimination, so spelling this as num_hashes separate
-    array_min(transform(...)) columns re-tokenizes the text num_hashes
-    times after projection collapse (measured 30x: 3.9s -> 0.2s at
-    sf0.1). Per-slot mixing is xxhash64(token_hash, slot) over
-    PRE-HASHED tokens (the token array is hashed once to array<long>,
-    then each slot mixes the long) — slots stay pairwise independent.
-    NOTE: this differs from mixing the raw string per-slot
-    (min(xxhash64(token, i))): per-slot minima and band collisions are
-    different random draws, so any b/r tuning must be re-measured
-    against exact ground truth when the mixing scheme changes — the
-    recall figures in minhash_lsh_pairs' docstring were measured under
-    the current scheme. An EMPTY token set leaves every slot at the
-    max-long sentinel (callers drop those rows before banding).
-
-    Shared by the in-query LSH join (minhash_lsh_pairs / survivors) and
-    the persisted dedup index (operators/dedup_index.py), so the two
-    paths cannot drift — the index-probe parity test depends on it."""
-    _max_long = (1 << 63) - 1
-    th = token_hashes(text)
+def _minhash_slots(th: Column, num_hashes: int) -> Column:
+    """array<long> MinHash signature of a token-hash set, built WITHOUT
+    an explode+groupBy shuffle: a single aggregate() walks the set
+    carrying all num_hashes slot minima (acc[i] = min(acc[i],
+    xxhash64(h, i))). One expression matters: higher-order functions are
+    excluded from codegen subexpression elimination, so spelling this as
+    num_hashes separate array_min(transform(...)) columns re-evaluates
+    the set num_hashes times after projection collapse. Per-slot mixing
+    is xxhash64(token_hash, slot) over PRE-HASHED tokens — slots stay
+    pairwise independent. NOTE: this differs from mixing the raw string
+    per-slot (min(xxhash64(token, i))): per-slot minima and band
+    collisions are different random draws, so any b/r tuning must be
+    re-measured against exact ground truth (tests/test_dedup_recall.py)
+    when the mixing scheme changes. An EMPTY set leaves every slot at
+    the max-long sentinel."""
     seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     return F.aggregate(
         th,
-        F.array_repeat(F.lit(_max_long).cast("long"), num_hashes),
+        F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes),
         lambda acc, h: F.zip_with(acc, seeds, lambda a, i: F.least(a, F.xxhash64(h, i))),
+    )
+
+
+def minhash_signature(text: Column, *, num_hashes: int) -> Column:
+    """array<long> MinHash signature of the text's distinct token-hash
+    set (see _minhash_slots)."""
+    return _minhash_slots(_th(text), num_hashes)
+
+
+def _signatures(docs: DataFrame, id_col: str, text_col: str, num_hashes: int) -> DataFrame:
+    """(doc_id, th, nt, mhs) for every doc with a non-empty token set:
+    ``mhs`` is the MinHash signature of ``th``, materialized once behind
+    a Generate barrier so band hashing reads its slots without re-running
+    the fold. An empty ``th`` leaves every slot at the sentinel; those
+    docs are dropped (they would all band-collide with each other on the
+    sentinel minima)."""
+    sig = generate_barrier(
+        _token_hash_sets(docs, id_col, text_col), mhs=_minhash_slots(F.col("th"), num_hashes)
+    )
+    return sig.where(F.element_at("mhs", 1) != F.lit(_MAX_LONG))
+
+
+def _minhash_bands(num_hashes: int, bands: int) -> list[Column]:
+    """The band hashes of a signature column ``mhs``: band b hashes its
+    num_hashes // bands consecutive slots, seeded with b."""
+    rows = num_hashes // bands
+    return [
+        F.xxhash64(F.lit(b), *[F.element_at("mhs", b * rows + r + 1) for r in range(rows)])
+        for b in range(bands)
+    ]
+
+
+def _band_rows(df: DataFrame, cols: list[str], bhashes: list[Column]) -> DataFrame:
+    """(*cols, band, bhash, prev0..prev{B-2}): one row per input row per
+    band, B = len(bhashes). Every EARLIER band's hash rides along (NULL
+    from the row's own band on), so a pair can be emitted at its first
+    colliding band only (_first_band_gate) — exactly-once candidates
+    with no distinct() shuffle. The survivors ops, whose EXISTS is
+    idempotent across bands, leave them unused."""
+    n = len(bhashes)
+    with_bh = df.select(*cols, *[h.alias(f"bh{b}") for b, h in enumerate(bhashes)])
+    structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.col(f"bh{b}").alias("bhash"),
+                # pad with NULLs so every struct has the same shape
+                *[
+                    (F.col(f"bh{p}") if p < b else F.lit(None).cast("long")).alias(f"prev{p}")
+                    for p in range(n - 1)
+                ],
+            )
+            for b in range(n)
+        ]
+    )
+    return with_bh.select(*cols, F.explode(structs).alias("bb")).select(*cols, "bb.*")
+
+
+def _same_bucket() -> Column:
+    """Band equi-join of band rows aliased ``a`` and ``b``."""
+    return (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
+
+
+def _first_band_gate(bands: int) -> Column:
+    """Exactly-once condition on a band join of aliases ``a`` and ``b``:
+    a pair is kept only at the lowest band where it collides, i.e. every
+    earlier band's hash differs."""
+    gate = F.lit(True)
+    for p in range(bands - 1):
+        gate = gate & (
+            (F.col("a.band") <= F.lit(p)) | (F.col(f"a.prev{p}") != F.col(f"b.prev{p}"))
+        )
+    return gate
+
+
+def _jaccard_verify(
+    cand: DataFrame, ids: tuple[str, str], inter: Column, na: Column, nb: Column, threshold: float
+) -> DataFrame:
+    """(*ids, jaccard) for the candidate rows whose exact Jaccard, from
+    the intersection size ``inter`` and set sizes ``na``/``nb``, is >=
+    threshold. ``inter`` crosses a Generate barrier: jaccard uses it
+    twice and the filter re-derives it, and HOF/array expressions are
+    excluded from codegen subexpression elimination, so CollapseProject
+    would otherwise inline the intersect into every consumer."""
+    return (
+        generate_barrier(cand, inter=inter)
+        .select(*ids, _jaccard(F.col("inter"), na, nb).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -220,58 +341,14 @@ def minhash_banded(
     bands: int = 5,
 ) -> DataFrame:
     """(doc_id, nt, band, bhash, prev0..prev{bands-2}): one row per doc
-    per band — the LSH join/index representation. The explode(array(...))
-    around the signature forms a Generate barrier CollapseProject cannot
-    cross, so the signature array materializes once before band hashing;
-    at 100 TB the whole frame is a pure map over the corpus. Every
-    EARLIER band's hash rides along (a few longs) so a pair can be
-    emitted at its FIRST colliding band only — exactly-once candidates
-    with no distinct() shuffle. nt (token-set size) rides along so the
-    size-ratio prune (J >= t forces |A|/|B| >= t) can run INSIDE the
-    candidate join."""
-    rows = num_hashes // bands
-    _max_long = (1 << 63) - 1
-    sig = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(token_set(text_col)).alias("nt"),
-            F.explode(F.array(minhash_signature(F.col(text_col), num_hashes=num_hashes))).alias("mhs"),
-        )
-        # empty token set -> untouched init slots; drop (they would all
-        # band-collide with each other on the sentinel minima)
-        .where(F.element_at("mhs", 1) != F.lit(_max_long))
-    )
-    bhash = [
-        F.xxhash64(
-            F.lit(b), *[F.element_at("mhs", b * rows + r + 1) for r in range(rows)]
-        ).alias(f"bh{b}")
-        for b in range(bands)
-    ]
-    with_bands = sig.select("doc_id", "nt", *bhash)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"bh{b}").alias("bhash"),
-                # pad with NULLs so every struct has the same shape
-                *[
-                    (F.col(f"bh{p}") if p < b else F.lit(None).cast("long")).alias(
-                        f"prev{p}"
-                    )
-                    for p in range(bands - 1)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    return with_bands.select(
-        "doc_id", "nt", F.explode(band_structs).alias("bb")
-    ).select(
-        "doc_id",
-        "nt",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bhash").alias("bhash"),
-        *[F.col(f"bb.prev{p}").alias(f"prev{p}") for p in range(bands - 1)],
+    per band — the LSH join and index representation (_band_rows over
+    the signature's band hashes); at 100 TB a pure map over the corpus.
+    nt rides along so the size-ratio prune can run INSIDE the candidate
+    join."""
+    return _band_rows(
+        _signatures(docs, id_col, text_col, num_hashes),
+        ["doc_id", "nt"],
+        _minhash_bands(num_hashes, bands),
     )
 
 
@@ -286,78 +363,57 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + banded LSH near-dup join, verified with exact Jaccard.
 
-    Pipeline (each stage one narrow map or one shuffle-on-key):
-      tokens -> explode -> per-doc min of xxhash64(token, seed_i)  [shuffle 1]
-      signatures -> band hashes -> explode bands                   [narrow]
-      self-equi-join on (band, band_hash), id< id                  [shuffle 2]
-      distinct candidates -> size-ratio prune -> exact-Jaccard     [shuffle 3]
+    Pipeline (each stage one narrow map or one join on a key; AQE
+    broadcasts the small sides):
+      token-hash set -> signature (one aggregate fold per doc)     [narrow]
+      band hashes -> explode bands                                 [narrow]
+      self-equi-join on (band, bhash), id < id, size-ratio prune,
+        first-colliding-band gate                                  [join]
+      join both sides' token-hash sets on doc_id -> exact Jaccard  [2 joins]
+    No signature groupBy and no distinct(): the signature is a per-doc
+    fold and each pair leaves the band join once.
 
     Parameter choice is the scale lever: theoretical recall at J=theta
     is 1-(1-theta^rows)^bands. Defaults (5 bands x 6 rows) put recall at
-    theta=0.9 at ~0.95 theoretical; MEASURED against the exact blockless
-    Jaccard ground truth on the sf0.1 corpus (964,854 true pairs):
-    recall 0.985, and ~40% FASTER end-to-end than the previous 3x10
-    default (recall 0.886) — more bands means shorter band hashes but the
-    size-ratio prune inside the candidate join keeps the extra collisions
-    from reaching the verify, while the verify stage itself stops
-    re-finding pairs the 10-row bands missed. 6x5 measures recall 0.999
-    at ~1.2x the 5x6 cost if near-exact recall is required. Candidate
-    volume on a LOW-base-similarity corpus (the realistic 100 TB case)
-    is ~bands * J_base^rows of all pairs — at J_base=0.3, 5x6 collides
-    on ~0.4% of pairs; still linear-ish and bounded by real collisions.
+    theta=0.9 at ~0.95 theoretical; recall against the exact blockless
+    Jaccard ground truth is pinned >= 0.95 on the sf0.001 corpus by
+    tests/test_dedup_recall.py. More bands mean shorter band hashes and
+    more collisions; the size-ratio prune inside the candidate join keeps
+    them from reaching the verify. Candidate volume on a
+    LOW-base-similarity corpus (the realistic 100 TB case) is ~bands *
+    J_base^rows of all pairs — at J_base=0.3, 5x6 collides on ~0.4% of
+    pairs; still linear-ish and bounded by real collisions.
 
     At 100 TB nothing here is quadratic: candidate volume is bounded by
     real collisions, and each join is a plain hash shuffle AQE can skew-
-    split. A size-ratio prune (|A|/|B| >= t is necessary for J >= t)
-    drops candidates before the array-intersect verify. Rows-only
-    correctness check (hash seeds are engine-specific).
+    split. Each pair is emitted once, at its first colliding band.
+    Rows-only correctness check (hash seeds are engine-specific).
     """
     docs = ensure_parallelism(docs)
     banded = minhash_banded(
         docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
     )
-    first_band_only = F.lit(True)
-    for p in range(bands - 1):
-        first_band_only = first_band_only & (
-            (F.col("a.band") <= F.lit(p)) | (F.col(f"a.prev{p}") != F.col(f"b.prev{p}"))
-        )
     cand = (
         banded.alias("a")
         .join(
             banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
+            _same_bucket()
             & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # size-ratio prune inside the join: J(A,B) <= min/max, so pairs
-            # whose set sizes already violate the threshold never leave the
-            # join — cheaper than pruning after the candidate rows exist
-            & (
-                F.least(F.col("a.nt"), F.col("b.nt")).cast("double")
-                >= F.lit(threshold) * F.greatest(F.col("a.nt"), F.col("b.nt")).cast("double")
-            )
-            & first_band_only,
+            & _size_ratio_ok(F.col("a.nt"), F.col("b.nt"), threshold)
+            & _first_band_gate(bands),
         )
         .select(F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b"))
     )
-    # Verify on token-HASH sets (array<long>): same set cardinalities as
-    # the string sets (xxhash64 collisions negligible), but long compares
-    # instead of string compares in the hot intersect. Sizes ride along
-    # so the ratio prune (min/max >= t is necessary for J >= t) fires
-    # before the intersect; `inter` is materialized as a column once
-    # instead of re-evaluating the intersect inside the jaccard
-    # expression. The intersect itself is ADAPTIVE (exact either way):
-    # _perfect_hash_plan probes the corpus vocabulary with one distinct-
-    # count job; when it is bounded (categorical sets, tags, ID sets, or
-    # pathological template corpora like this fixture) every token set is
-    # dictionary-encoded into an M-bit bitset via a driver-verified
-    # injective hash, and |A inter B| = sum popcount(fa & fb) — a few
-    # AND+popcount ops per pair instead of array_intersect's per-pair
-    # boxed hash set (measured 60us/pair; the bitset path is ~50x
-    # cheaper on the verify stage). Open text vocabularies take the
-    # array_intersect fallback — that is the expected 100 TB path, and
-    # the probe costs one map-side-combined count-distinct scan.
-    tok_hashes = F.array_distinct(token_hashes(text_col))
-    ph = _perfect_hash_plan(docs, tok_hashes)
+    # The verify intersect is ADAPTIVE (exact either way): when the
+    # corpus vocabulary is bounded (categorical sets, tags, ID sets, or
+    # template corpora like this fixture), _perfect_hash_plan's one
+    # distinct-count job finds an injective hash, every token set is
+    # dictionary-encoded into an M-bit bitset, and |A inter B| = sum
+    # popcount(fa & fb) — a few AND+popcount ops per pair instead of
+    # array_intersect's per-pair boxed hash set. Open text vocabularies
+    # take the array_intersect fallback — the expected 100 TB path.
+    tsets = _token_hash_sets(docs, id_col, text_col)
+    ph = _perfect_hash_plan(tsets)
     if ph is not None:
         seed, nwords = ph
         widx = F.sequence(F.lit(0), F.lit(nwords - 1))
@@ -386,55 +442,29 @@ def minhash_lsh_pairs(
                 toks, F.array_repeat(F.lit(0).cast("long"), nwords), set_bit
             )
 
-        tsets = docs.select(
-            F.col(id_col).alias("doc_id"),
-            bitset(tok_hashes).alias("toks"),
-            F.size(tok_hashes).alias("nt"),
-        )
-        inter_expr = F.aggregate(
+        tsets = tsets.withColumn("th", bitset(F.col("th")))
+        inter = F.aggregate(
             F.zip_with("ta", "tb", lambda x, y: F.bit_count(x.bitwiseAND(y))),
             F.lit(0),
             lambda acc, c: acc + c,
         )
     else:
-        tsets = docs.select(
-            F.col(id_col).alias("doc_id"), tok_hashes.alias("toks")
-        ).withColumn("nt", F.size("toks"))
-        inter_expr = F.size(F.array_intersect("ta", "tb"))
-    return (
-        cand.join(
-            tsets.select(
-                F.col("doc_id").alias("doc_id_a"), F.col("toks").alias("ta"), F.col("nt").alias("na")
-            ),
-            "doc_id_a",
+        inter = F.size(F.array_intersect("ta", "tb"))
+
+    def side(s: str) -> DataFrame:
+        return tsets.select(
+            F.col("doc_id").alias(f"doc_id_{s}"),
+            F.col("th").alias(f"t{s}"),
+            F.col("nt").alias(f"n{s}"),
         )
-        .join(
-            tsets.select(
-                F.col("doc_id").alias("doc_id_b"), F.col("toks").alias("tb"), F.col("nt").alias("nb")
-            ),
-            "doc_id_b",
-        )
-        .where(
-            F.least("na", "nb").cast("double") / F.greatest("na", "nb").cast("double")
-            >= F.lit(threshold)
-        )
-        # Generate barrier (explode of a 1-element array) so CollapseProject
-        # cannot inline inter_expr into its consumers: jaccard uses `inter`
-        # twice and the final filter re-derives it, and HOF/array exprs are
-        # excluded from codegen subexpression elimination — the collapsed
-        # plan evaluated the intersect ~4x per candidate (16x corpus: the
-        # verify stage measured 142s vs the 26s the microbenched per-pair
-        # cost predicts; the barrier restores the one-evaluation cost).
-        .withColumn("inter", F.explode(F.array(inter_expr)))
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+
+    return _jaccard_verify(
+        cand.join(side("a"), "doc_id_a").join(side("b"), "doc_id_b"),
+        ("doc_id_a", "doc_id_b"),
+        inter,
+        F.col("na"),
+        F.col("nb"),
+        threshold,
     )
 
 
@@ -456,26 +486,47 @@ def simhash_bits(text: Column, *, nbits: int = 64) -> Column:
     return sig
 
 
-def _simhash_banded(docs: DataFrame, id_col: str, text_col: str, bands: int) -> DataFrame:
-    """(doc_id, sig, band, bval): one row per doc per 64/bands-bit
-    signature band — the SimHash blocking representation."""
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"), simhash_bits(F.col(text_col)).alias("sig")
-    )
-    width = 64 // bands
+def _bit_banded(df: DataFrame, id_col: str, sig_col: str, bands: int, width: int) -> DataFrame:
+    """(id, sig, band, bhash, prev..): band rows over ``bands`` disjoint
+    ``width``-bit slices of a bit-signature column."""
     mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sig"), b * width).bitwiseAND(F.lit(mask)).alias("bval"),
-            )
-            for b in range(bands)
-        ]
+    return _band_rows(
+        df,
+        [id_col, sig_col],
+        [F.shiftright(F.col(sig_col), b * width).bitwiseAND(F.lit(mask)) for b in range(bands)],
     )
-    return sig.select("doc_id", "sig", F.explode(band_arr).alias("bb")).select(
-        "doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval")
+
+
+def hamming_band_pairs(
+    df: DataFrame, id_col: str, sig_col: str, *, bands: int, width: int, max_hamming: int
+) -> DataFrame:
+    """({id_col}_a, {id_col}_b, hamming): pairs of rows (a < b) whose
+    bit signatures agree on at least one of ``bands`` disjoint
+    ``width``-bit slices and differ in at most ``max_hamming`` bits. By
+    pigeonhole, the banding finds every pair within Hamming bands-1;
+    beyond that its recall is partial. Each pair is emitted at its first
+    colliding band, then verified with one xor+popcount."""
+    banded = _bit_banded(df, id_col, sig_col, bands, width)
+    return (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            _same_bucket()
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & _first_band_gate(bands),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(f"{id_col}_a"),
+            F.col(f"b.{id_col}").alias(f"{id_col}_b"),
+            F.bit_count(F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}"))).alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
     )
+
+
+def _simhash_sigs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, sig): the SimHash signature of every doc."""
+    return docs.select(F.col(id_col).alias("doc_id"), simhash_bits(F.col(text_col)).alias("sig"))
 
 
 def simhash_near_dup_pairs(
@@ -486,27 +537,20 @@ def simhash_near_dup_pairs(
     max_hamming: int = 6,
     bands: int = 4,
 ) -> DataFrame:
-    """SimHash near-dup: block on exact match of one of 4 16-bit bands
-    (any pair within Hamming<=3 of the 64-bit sig must agree on >=1 band;
-    wider max_hamming trades recall), verify bit_count(xor) <= k."""
+    """SimHash near-dup pairs (doc_id_a, doc_id_b, hamming): block on
+    exact match of one of 4 16-bit bands (any pair within Hamming<=3 of
+    the 64-bit sig must agree on >=1 band; wider max_hamming trades
+    recall), verify bit_count(xor) <= k; each pair once
+    (hamming_band_pairs)."""
     docs = ensure_parallelism(docs)
-    banded = _simhash_banded(docs, id_col, text_col, bands)
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
-        )
-        .distinct()
+    return hamming_band_pairs(
+        _simhash_sigs(docs, id_col, text_col),
+        "doc_id",
+        "sig",
+        bands=bands,
+        width=64 // bands,
+        max_hamming=max_hamming,
     )
-    return pairs.where(F.col("hamming") <= max_hamming)
 
 
 def connected_components(
@@ -607,77 +651,41 @@ def minhash_lsh_survivors(
     Spark stops scanning a bucket at the doc's first confirmed
     duplicate — on a saturated corpus that is almost immediately, and
     wall tracks N (pinned by tests/test_dedup_recall.py). Bands and
-    signatures are identical to minhash_lsh_pairs (same hash mixing, so
-    the decision sets agree — also pinned); no first-band dedup is
+    signatures are identical to minhash_lsh_pairs (same banded-LSH core,
+    so the decision sets agree — also pinned); no first-band gate is
     needed because EXISTS is idempotent across a pair's bands. Cost
-    note: token-hash arrays ride the banded shuffle (bands x corpus),
-    the price of verifying inside the join; rows-only correctness
+    note: token-hash sets ride the banded shuffle (bands x corpus), the
+    price of verifying inside the join; rows-only correctness
     (hash-seeded).
 
-    ORDERED MERGE-SEMI probe (optimization round 11; replaces round
-    10's two-phase probe). The scale hazard both rounds target: the
-    semi join's "stop at the first confirmed duplicate" story is only
-    linear if a probe row MEETS a verifying lower-id partner early.
-    With a shuffled-HASH build the bucket's entries are scanned in
-    hash-chain order (Spark prepends — effectively reverse insertion
-    order), so on a duplicate-saturated bucket a probe can scan
-    O(bucket) higher-id entries first: measured quadratic in round 10
-    (3000/6000/12000/24000 docs: 1.08/1.26/2.48/7.46s). Round 10 fixed
-    that with a representative phase 1 + EXISTS phase 2 — correct, but
-    it cost TWO extra signature passes and two token-array exchanges
-    on every corpus (+0.6-0.9s on the sf0.1 bench row).
-
-    This round keeps the single EXISTS join and fixes the SCAN ORDER
-    instead: the build side is explicitly repartitioned on the join
-    key and sorted (band, bhash, doc_id) within partitions, and the
-    join is pinned to SORT-MERGE. The merge scans each key group in
-    that sort order — ascending doc_id — and LeftSemi emits on the
-    first row satisfying the residual verify, so every probe in a
-    saturated bucket confirms against the bucket's minimum-id member
-    in O(1) buffered rows BY CONSTRUCTION (the sort is part of the
-    plan, not hash luck; the build-side ordering satisfies the SMJ's
-    required (band, bhash) prefix, so no second sort is inserted).
-    Same guarantee round 10's phase 1 gave, strictly stronger settling
-    (first verifying partner in id order, not only the min-id
-    representative), at the r9 cost shape: 2 signature passes, 2
-    exchanges, no census/anti-join machinery. A bucket whose members
-    collide in every band yet never verify still scans the full group
-    — true of the two-phase spelling and of any exact-verify LSH.
-    Decision set unchanged: the join computes the identical EXISTS."""
+    ORDERED MERGE-SEMI probe. The semi join's "stop at the first
+    confirmed duplicate" is only linear if a probe row MEETS a verifying
+    lower-id partner early. With a shuffled-HASH build the bucket's
+    entries are scanned in hash-chain order (Spark prepends —
+    effectively reverse insertion order), so on a duplicate-saturated
+    bucket a probe can scan O(bucket) higher-id entries first
+    (quadratic wall, measured in OPTIMIZATION_r10.md §7). So the build
+    side is partitioned on the join key and sorted (band, bhash, doc_id)
+    within partitions, and the join is pinned to SORT-MERGE. The merge
+    scans each key group in that sort order — ascending doc_id — and
+    LeftSemi emits on the first row satisfying the residual verify, so
+    every probe in a saturated bucket confirms against the bucket's
+    minimum-id member in O(1) buffered rows BY CONSTRUCTION (the sort is
+    part of the plan, not hash luck; the build-side ordering satisfies
+    the SMJ's required (band, bhash) prefix, so no second sort is
+    inserted). A bucket whose members collide in every band yet never
+    verify still scans the full group — true of any exact-verify LSH."""
     docs = ensure_parallelism(docs)
-    rows = num_hashes // bands
-    _max_long = (1 << 63) - 1
-    sig_arr = minhash_signature(F.col(text_col), num_hashes=num_hashes)
-    tok_hashes = F.array_distinct(token_hashes(text_col))
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tok_hashes.alias("toks"),
-        F.size(tok_hashes).alias("nt"),
-        F.explode(F.array(sig_arr)).alias("mhs"),
-    ).where(F.element_at("mhs", 1) != F.lit(_max_long))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b), *[F.element_at("mhs", b * rows + r + 1) for r in range(rows)]
-                ).alias("bhash"),
-            )
-            for b in range(bands)
-        ]
+    banded = _band_rows(
+        _signatures(docs, id_col, text_col, num_hashes),
+        ["doc_id", "th", "nt"],
+        _minhash_bands(num_hashes, bands),
     )
-    banded = sig.select(
-        "doc_id", "toks", "nt", F.explode(band_structs).alias("bb")
-    ).select("doc_id", "toks", "nt", F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"))
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    jac = inter.cast("double") / (F.col("a.nt") + F.col("b.nt") - inter).cast("double")
+    inter = F.size(F.array_intersect(F.col("a.th"), F.col("b.th")))
     verify = (
         (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.least(F.col("a.nt"), F.col("b.nt")).cast("double")
-            >= F.lit(threshold) * F.greatest(F.col("a.nt"), F.col("b.nt")).cast("double")
-        )
-        & (jac >= F.lit(threshold))
+        & _size_ratio_ok(F.col("a.nt"), F.col("b.nt"), threshold)
+        & (_jaccard(inter, F.col("a.nt"), F.col("b.nt")) >= F.lit(threshold))
     )
     # Build side carries a bucket-local row_number ordered by doc_id.
     # The rank value itself is inert (see the verify conjunct below) —
@@ -687,19 +695,18 @@ def minhash_lsh_survivors(
     # bhash) ordering is a satisfied PREFIX, so no re-sort is inserted
     # and every merge group is scanned ascending by doc_id. (A plain
     # sortWithinPartitions is NOT enough: Catalyst's EliminateSorts
-    # removes explicit sorts under order-agnostic operators like joins
-    # — verified on the actual plan — while a window's sort is
-    # load-bearing and survives.) The merge hint pins SORT-MERGE: a
-    # broadcast or shuffled-hash build would scan buckets in hash-chain
-    # order again.
+    # removes explicit sorts under order-agnostic operators like joins,
+    # while a window's sort is load-bearing and survives.) The merge
+    # hint pins SORT-MERGE: a broadcast or shuffled-hash build would
+    # scan buckets in hash-chain order again. Both are pinned by
+    # tests/test_plan_pins.py.
     wb = Window.partitionBy("band", "bhash").orderBy("doc_id")
     build = banded.withColumn("_rk", F.row_number().over(wb)).hint("merge").alias("a")
     pruned = (
         banded.alias("b")
         .join(
             build,
-            (F.col("b.band") == F.col("a.band"))
-            & (F.col("b.bhash") == F.col("a.bhash"))
+            _same_bucket()
             # inert conjunct: keeps _rk (and with it the ordering
             # window) alive through column pruning; always true, so the
             # EXISTS decision set is untouched
@@ -730,16 +737,15 @@ def simhash_survivors(
     ``max_hamming``. Same banding as simhash_near_dup_pairs; the LEFT
     SEMI probe stops at each doc's first qualifying lower-id partner, so
     a duplicate-saturated corpus costs O(bucket scan to first hit), not
-    O(pairs), and no first-band dedup or distinct() is needed (EXISTS is
-    idempotent across bands)."""
+    O(pairs), and no first-band gate is needed (EXISTS is idempotent
+    across bands)."""
     docs = ensure_parallelism(docs)
-    banded = _simhash_banded(docs, id_col, text_col, bands)
+    banded = _bit_banded(_simhash_sigs(docs, id_col, text_col), "doc_id", "sig", bands, 64 // bands)
     pruned = (
         banded.alias("b")
         .join(
             banded.alias("a"),
-            (F.col("b.band") == F.col("a.band"))
-            & (F.col("b.bval") == F.col("a.bval"))
+            _same_bucket()
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
                 F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))

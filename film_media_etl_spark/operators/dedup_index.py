@@ -6,31 +6,31 @@ same build/probe split ann_index.py gives the vector store).
 Why it exists: the in-query LSH join (operators/dedup.py) re-signatures
 the whole corpus every run. At ingest, the corpus is already indexed —
 only the new batch should pay signature cost, and the corpus side
-should be READ, never shuffled. The index is two parquet tables:
+should be READ, never shuffled. The index is two parquet tables, both
+written by write_index_tables (build_dedup_index writes them once; the
+stream writes one increment per micro-batch,
+streaming/ingest_dedup.start_index_dedup_stream):
 
-- ``bands/``: (doc_id, nt, band, bhash) — one row per corpus doc per
-  band, the LSH candidate-generation surface. bands x corpus rows of a
-  few longs each; at 100 TB this is the only corpus-sized artifact a
-  probe scans, and it is orders of magnitude narrower than the corpus.
-- ``sigs/``: (doc_id, nt, tok_hashes array<long>) — the token-HASH sets
-  the exact-Jaccard verify needs (same cardinalities as the string
-  sets; xxhash64 collisions negligible and deterministic). Only
-  CANDIDATE corpus docs are ever joined against it.
+- ``bands/``: (doc_id, nt, band, bhash, prev0..) — minhash_banded,
+  one row per corpus doc per band, the LSH candidate-generation
+  surface. bands x corpus rows of a few longs each; at 100 TB this is
+  the only corpus-sized artifact a probe scans, and it is orders of
+  magnitude narrower than the corpus.
+- ``sigs/``: (doc_id, tok_hashes, nt) — the distinct token-hash sets
+  the exact-Jaccard verify needs. Only CANDIDATE corpus docs are ever
+  joined against it.
 
 Probe plan shape: the new batch's banded signatures BROADCAST into the
 bands scan (a new batch is small relative to an indexed corpus by
 construction), so the corpus side never exchanges; candidates then
-join ``sigs`` on doc_id for the verify. Every expression (tokenize,
-signature, band hash, size-ratio prune, Jaccard) is shared with
-minhash_lsh_pairs via minhash_signature/minhash_banded, so the probe's
-decisions are bit-identical to the batch op's — pinned by a parity
-test that checks probe output == the batch pairs crossing the
-corpus/batch split (tests/test_dedup_recall.py).
-
-Exactly-once candidates use the same first-colliding-band trick as the
-batch op (prev-band hashes ride both sides), so no candidate-sized
-distinct() exists anywhere. Rows-only correctness (hash-seeded), recall
-inherited from the shared banding (0.985 at theta=0.9, measured).
+join ``sigs`` on doc_id for the verify. Token-hash sets, signatures,
+band hashes, the first-colliding-band gate (exactly-once candidates, no
+distinct()), the size-ratio prune and the Jaccard verify all come from
+the banded-LSH core in operators/dedup.py that minhash_lsh_pairs uses,
+so the probe's decisions are bit-identical to the batch op's — pinned
+by a parity test that checks probe output == the batch pairs crossing
+the corpus/batch split (tests/test_dedup_recall.py). Rows-only
+correctness (hash-seeded); recall is the shared banding's.
 """
 
 from __future__ import annotations
@@ -38,9 +38,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import token_hashes
 from ..sources import ensure_parallelism
-from .dedup import minhash_banded
+from .dedup import (
+    _first_band_gate,
+    _jaccard_verify,
+    _same_bucket,
+    _size_ratio_ok,
+    _token_hash_sets,
+    minhash_banded,
+)
 
 _NUM_HASHES = 30
 _BANDS = 5
@@ -55,6 +61,27 @@ _BANDS = 5
 _BROADCAST_PROBE_ROWS = 2_000_000
 
 
+def write_index_tables(
+    docs: DataFrame,
+    bands_path: str,
+    sigs_path: str,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = _NUM_HASHES,
+    bands: int = _BANDS,
+) -> None:
+    """Write the two index tables of ``docs`` (see the module doc).
+    Docs with empty token sets are absent from both (they cannot
+    near-dup anything)."""
+    minhash_banded(
+        docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
+    ).write.mode("overwrite").parquet(bands_path)
+    _token_hash_sets(docs, id_col, text_col).where(F.col("nt") > 0).select(
+        "doc_id", F.col("th").alias("tok_hashes"), "nt"
+    ).write.mode("overwrite").parquet(sigs_path)
+
+
 def build_dedup_index(
     docs: DataFrame,
     index_dir: str,
@@ -64,19 +91,17 @@ def build_dedup_index(
     num_hashes: int = _NUM_HASHES,
     bands: int = _BANDS,
 ) -> None:
-    """Signature the corpus once and persist the LSH layout. Write-once;
-    probes never re-signature the corpus. Docs with empty token sets are
-    absent from both tables (they cannot near-dup anything)."""
-    docs = ensure_parallelism(docs)
-    banded = minhash_banded(
-        docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
+    """Signature the corpus once and persist the LSH layout under
+    ``index_dir``. Write-once; probes never re-signature the corpus."""
+    write_index_tables(
+        ensure_parallelism(docs),
+        f"{index_dir}/bands",
+        f"{index_dir}/sigs",
+        id_col=id_col,
+        text_col=text_col,
+        num_hashes=num_hashes,
+        bands=bands,
     )
-    banded.write.mode("overwrite").parquet(f"{index_dir}/bands")
-    th = F.array_distinct(token_hashes(text_col))
-    sigs = docs.select(
-        F.col(id_col).alias("doc_id"), th.alias("tok_hashes"), F.size(th).alias("nt")
-    ).where(F.col("nt") > 0)
-    sigs.write.mode("overwrite").parquet(f"{index_dir}/sigs")
 
 
 def probe_dedup_index(
@@ -278,49 +303,31 @@ def probe_dedup_frames(
     def ride(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
-    probe_banded = (
-        minhash_banded(
-            new_docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
-        )
-        .withColumnRenamed("doc_id", "probe_id")
-        .withColumnRenamed("nt", "pnt")
-        .withColumnRenamed("band", "pband")
-        .withColumnRenamed("bhash", "pbhash")
+    probe_banded = minhash_banded(
+        new_docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
     )
-    for p in range(bands - 1):
-        probe_banded = probe_banded.withColumnRenamed(f"prev{p}", f"pprev{p}")
-    th = F.array_distinct(token_hashes(text_col))
-    probe_sigs = new_docs.select(
-        F.col(id_col).alias("probe_id"), th.alias("ptoks")
+    probe_sigs = _token_hash_sets(new_docs, id_col, text_col).select(
+        F.col("doc_id").alias("probe_id"), F.col("th").alias("ptoks"), F.col("nt").alias("pnt")
     )
 
-    # first-colliding-band gate, bipartite spelling of the batch op's:
-    # a (probe, corpus) pair is emitted only at the lowest band where
-    # BOTH sides collide — earlier bands must differ on at least one side
-    first_band_only = F.lit(True)
-    for p in range(bands - 1):
-        first_band_only = first_band_only & (
-            (F.col("band") <= F.lit(p))
-            | (F.col(f"prev{p}") != F.col(f"pprev{p}"))
+    # a = index side, b = probe side: a (probe, corpus) pair is emitted
+    # only at the lowest band where both collide
+    cand = (
+        idx_bands.alias("a")
+        .join(
+            ride(probe_banded).alias("b"),
+            _same_bucket()
+            & (F.col("a.doc_id") != F.col("b.doc_id"))
+            & _size_ratio_ok(F.col("a.nt"), F.col("b.nt"), threshold)
+            & _first_band_gate(bands),
         )
-    cand = idx_bands.join(
-        ride(probe_banded),
-        (F.col("band") == F.col("pband"))
-        & (F.col("bhash") == F.col("pbhash"))
-        & (F.col("doc_id") != F.col("probe_id"))
-        # size-ratio prune inside the join (J >= t forces min/max >= t)
-        & (
-            F.least(F.col("nt"), F.col("pnt")).cast("double")
-            >= F.lit(threshold)
-            * F.greatest(F.col("nt"), F.col("pnt")).cast("double")
-        )
-        & first_band_only,
-    ).select(F.col("probe_id"), F.col("doc_id").alias("corpus_id"))
+        .select(F.col("b.doc_id").alias("probe_id"), F.col("a.doc_id").alias("corpus_id"))
+    )
 
     # candidates are collision-bound (probe-batch-sized), so THEY
     # broadcast into the sigs scan — the corpus-sized side of the verify
     # join streams too; nothing corpus-sized ever exchanges in the probe
-    verified = (
+    joined = (
         idx_sigs.select(
             F.col("doc_id").alias("corpus_id"),
             F.col("tok_hashes").alias("ctoks"),
@@ -328,20 +335,12 @@ def probe_dedup_frames(
         )
         .join(ride(cand), "corpus_id")
         .join(ride(probe_sigs), "probe_id")
-        # Generate barrier: `inter` feeds jaccard twice plus the filter,
-        # and HOF/array exprs are excluded from codegen subexpression
-        # elimination (the minhash_lsh_pairs lesson — 4x re-evaluation)
-        .withColumn(
-            "inter", F.explode(F.array(F.size(F.array_intersect("ptoks", "ctoks"))))
-        )
-        .select(
-            "probe_id",
-            "corpus_id",
-            (
-                F.col("inter").cast("double")
-                / (F.size("ptoks") + F.col("cnt") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
     )
-    return verified
+    return _jaccard_verify(
+        joined,
+        ("probe_id", "corpus_id"),
+        F.size(F.array_intersect("ptoks", "ctoks")),
+        F.col("pnt"),
+        F.col("cnt"),
+        threshold,
+    )

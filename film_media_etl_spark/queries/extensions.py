@@ -16,6 +16,7 @@ from ..functions.vectors import oracle_cosine, oracle_dot
 from ..operators.dedup import (
     connected_components,
     exact_dedup,
+    hamming_band_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
@@ -76,7 +77,7 @@ def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard near-dup pairs, blocked on (source, lang)."""
     return token_jaccard_pairs(
-        ensure_parallelism(load_table(spark, sf_dir, "documents")), block_cols=("source", "lang"), threshold=0.9
+        load_table(spark, sf_dir, "documents"), block_cols=("source", "lang"), threshold=0.9
     )
 
 
@@ -107,7 +108,7 @@ def ext_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-bigram shingle Jaccard near-dup pairs, blocked on
     (source, lang) — order-sensitive where token sets are not."""
     return ngram_jaccard_pairs(
-        ensure_parallelism(load_table(spark, sf_dir, "documents")), n=2, block_cols=("source", "lang"), threshold=0.8
+        load_table(spark, sf_dir, "documents"), n=2, block_cols=("source", "lang"), threshold=0.8
     )
 
 
@@ -115,10 +116,11 @@ def ext_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs with exact-Jaccard verification (the
     100 TB path: banded candidate join, nothing quadratic). 5 bands x 6
-    rows: recall 0.985 at theta=0.9 measured against the exact blockless
-    Jaccard ground truth on the sf0.1 corpus (see operators/dedup.py)."""
+    rows at theta=0.9; recall against the exact blockless Jaccard ground
+    truth is pinned by tests/test_dedup_recall.py (see
+    operators/dedup.py)."""
     return minhash_lsh_pairs(
-        ensure_parallelism(load_table(spark, sf_dir, "documents")), num_hashes=30, bands=5, threshold=0.9
+        load_table(spark, sf_dir, "documents"), num_hashes=30, bands=5, threshold=0.9
     )
 
 
@@ -151,7 +153,7 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same components as a recursive-CTE transitive
     closure (fine at oracle scale; the Spark path is the one that scales)."""
     pairs = token_jaccard_pairs(
-        ensure_parallelism(load_table(spark, sf_dir, "documents")), block_cols=("source", "lang"), threshold=0.9
+        load_table(spark, sf_dir, "documents"), block_cols=("source", "lang"), threshold=0.9
     )
     return connected_components(pairs)
 
@@ -159,7 +161,7 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ext_dedup_simhash")  # hash-seeded -> rows-only check
 def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banded near-dup pairs (Hamming <= 6)."""
-    return simhash_near_dup_pairs(ensure_parallelism(load_table(spark, sf_dir, "documents")), max_hamming=6)
+    return simhash_near_dup_pairs(load_table(spark, sf_dir, "documents"), max_hamming=6)
 
 
 _EMB_COS = oracle_cosine("a.embedding", "b.embedding")
@@ -281,10 +283,10 @@ def ext_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 neighbors via IVF: KMeans cells + nprobe search
     (operators/similarity.py:cosine_knn_ivf). nprobe=10/16 sits at the
-    measured recall knee (tools/ann_recall_sweep.py at sf0.1: 0.925
-    recall@5; 0.800 at 8/16, 0.725 at the old 6/16 — the fixture's
-    embeddings are uniform random, the ANN worst case, so these floors
-    understate clustered-corpus behavior). Probe wall is flat across
+    measured recall knee (tools/ann_recall_sweep.py at sf0.1, README
+    table: 0.925 recall@5; 0.800 at 8/16, 0.725 at the old 6/16 — the
+    fixture's embeddings are uniform random, the ANN worst case, so
+    these floors understate clustered-corpus behavior). Probe wall is flat across
     nprobe at fixture scale; at 100 TB nprobe/nlist is the scan
     fraction, and a real deployment raises nlist with corpus size
     (nlist ~ sqrt(N)) instead of probing most of 16 cells."""
@@ -677,7 +679,8 @@ def ext_multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame
     corrupt_odd), so each (2k, 2k+1) pair is a true near-dup within
     Hamming<=2; the query reports all pairs at Hamming<=3.
 
-    The pair search is the SimHash banding idiom on the 56-bit dHash:
+    The pair search is SimHash's banded pair join
+    (operators/dedup.hamming_band_pairs) on the 56-bit dHash:
     4 disjoint 14-bit bands, candidates from per-band equi-joins only
     — by pigeonhole, <=3 flipped bits cannot dirty all 4 bands, so
     banding is COMPLETE at this threshold and the semantics stay
@@ -692,55 +695,12 @@ def ext_multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ids = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     h = dhash_media(render_ppm_textured(ids, corrupt_odd=True))
-    bands, width = 4, 14
-    mask = (1 << width) - 1
-
-    def band_val(col: str, b: int):
-        return F.shiftright(F.col(col), width * b).bitwiseAND(F.lit(mask))
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_val("dhash", b).alias("bhash"),
-                *[
-                    (
-                        band_val("dhash", p)
-                        if p < b
-                        else F.lit(None).cast("long")
-                    ).alias(f"prev{p}")
-                    for p in range(bands - 1)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = h.select(
-        "media_id", "dhash", F.explode(band_structs).alias("bb")
-    ).select("media_id", "dhash", "bb.*")
-    first_band_only = F.lit(True)
-    for p in range(bands - 1):
-        first_band_only = first_band_only & (
-            (F.col("a.band") <= F.lit(p))
-            | (F.col(f"a.prev{p}") != F.col(f"b.prev{p}"))
-        )
-    return (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.media_id") < F.col("b.media_id"))
-            & first_band_only,
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.bit_count(F.col("a.dhash").bitwiseXOR(F.col("b.dhash")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= 3)
+    return hamming_band_pairs(
+        h, "media_id", "dhash", bands=4, width=14, max_hamming=3
+    ).select(
+        F.col("media_id_a").alias("id_a"),
+        F.col("media_id_b").alias("id_b"),
+        F.col("hamming").cast("int").alias("hamming"),
     )
 
 

@@ -33,12 +33,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
+from ..sources import TABLES
 
-_ORACLE_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Last sf_dir an actual driver query call passed in — the strongest signal
 # for where the parquet layout really lives on this box (see
@@ -47,7 +44,7 @@ _LAST_SF_DIR: str | None = None
 
 
 def _has_all_tables(d: str) -> bool:
-    return all(os.path.exists(os.path.join(d, f"{t}.parquet")) for t in _ORACLE_TABLES)
+    return all(os.path.exists(os.path.join(d, f"{t}.parquet")) for t in TABLES)
 
 
 def _find_typing_dir() -> str:
@@ -66,7 +63,7 @@ def _find_typing_dir() -> str:
             return explicit
         raise RuntimeError(
             f"SPARK_GRAFT_ORACLE_SF={explicit} is missing some of "
-            f"{_ORACLE_TABLES}; point it at a directory holding all ten "
+            f"{TABLES}; point it at a directory holding all ten "
             "parquet tables (any scale factor — typing is DESCRIBE-only)."
         )
     candidates = [
@@ -90,7 +87,7 @@ def _find_typing_dir() -> str:
             return c
     raise RuntimeError(
         "oracle typing views unavailable: no directory with all of "
-        f"{_ORACLE_TABLES} found among {sorted(seen)}. Set "
+        f"{TABLES} found among {sorted(seen)}. Set "
         "SPARK_GRAFT_ORACLE_SF to one. Typing must not fail silently: the "
         "Spark side unconditionally casts decimal outputs to double, so an "
         "untyped oracle would hash-mismatch every decimal-output query."
@@ -185,7 +182,7 @@ def _oracle_typing_connection():
 
     typing_sf = _find_typing_dir()
     con = duckdb.connect()
-    for t in _ORACLE_TABLES:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{typing_sf}/{t}.parquet'")
     return con
 

@@ -3,7 +3,7 @@ dedup stack (operators/dedup.py). A 100 TB training-data pipeline dedups
 AT INGEST so duplicates never reach storage; these operators express
 that with Structured Streaming's own state machinery.
 
-Two tiers, mirroring the batch exact/near split:
+Four operators, mirroring the batch tiers:
 
 - ``stream_content_dedup`` — exact content dedup: fingerprint the RAW
   text (xxhash64 — the same convention as the batch exact tier
@@ -24,6 +24,12 @@ Two tiers, mirroring the batch exact/near split:
   (documented partial tier, same analysis as the batch banding test).
   State per bucket is capped at ``max_state`` admitted signatures
   (oldest evicted) so a hot bucket cannot grow without bound.
+- ``start_index_dedup_stream`` — MinHash near-dup dedup
+  backed by the persisted index (operators/dedup_index.py): each
+  micro-batch probes the index increments of earlier batches and
+  appends its own.
+- ``stream_curation_gate`` — the batch curation verdict, gate for gate,
+  on a stream.
 
 Correctness strategy: no SQL oracle exists for streams — pytest drains
 against the static corpus and compares to a batch replay of the same
@@ -38,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import token_hashes, tokens
+from ..functions.text import tokens
 from ..operators.dedup import simhash_bits
 
 
@@ -360,9 +366,9 @@ def start_index_dedup_stream(
 
     from ..operators.dedup import minhash_lsh_survivors
     from ..operators.dedup_index import (
-        minhash_banded,
         probe_dedup_frames,
         read_stream_dedup_index,
+        write_index_tables,
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -388,14 +394,10 @@ def start_index_dedup_stream(
         else:
             flags = within
         flags.write.mode("overwrite").parquet(os.path.join(out_path, f"v{batch_id}"))
-        minhash_banded(batch_df).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "bands", f"v{batch_id}")
-        )
-        th = F.array_distinct(token_hashes("text"))
-        batch_df.select(
-            F.col("doc_id"), th.alias("tok_hashes"), F.size(th).alias("nt")
-        ).where(F.col("nt") > 0).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "sigs", f"v{batch_id}")
+        write_index_tables(
+            batch_df,
+            os.path.join(index_dir, "bands", f"v{batch_id}"),
+            os.path.join(index_dir, "sigs", f"v{batch_id}"),
         )
 
     writer = (

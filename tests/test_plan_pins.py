@@ -80,6 +80,26 @@ def test_minhash_survivors_semi_join_scans_buckets_by_doc_id(spark):
     assert not any(re.search(r"\b(Sort|Exchange)\b", ln) for ln in between), "\n".join(between)
 
 
+@pytest.mark.parametrize(
+    "name, id_cols",
+    [
+        ("ext_dedup_minhash", ("doc_id_a", "doc_id_b")),
+        ("ext_dedup_simhash", ("doc_id_a", "doc_id_b")),
+        ("ext_multimodal_phash_near_dup", ("id_a", "id_b")),
+    ],
+)
+def test_banded_pair_ops_emit_each_pair_once(spark, name, id_cols):
+    """The banded pair ops emit a pair at its first colliding band only
+    (operators/dedup._first_band_gate), so no pair repeats — no
+    duplicate row, no mirrored (b, a) row — and no aggregate (a
+    distinct() shuffle) is needed to get there."""
+    df = _q(name, spark)
+    assert df.count() == df.distinct().count() > 0
+    pairs = {(r[id_cols[0]], r[id_cols[1]]) for r in df.select(*id_cols).collect()}
+    assert not {(a, b) for a, b in pairs if (b, a) in pairs}
+    assert "HashAggregate" not in physical_plan(df)
+
+
 # Corpus scans that tokenize, per corpus curation op: the distinct
 # `text` attributes fed to the word split (functions.text.tokens) in the
 # executed plan. Each is one pass over the documents that splits every

@@ -15,3 +15,12 @@ def test_corpus_word_split_is_spelled_only_in_functions_text():
         str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if "F.split(F.lower(" in p.read_text()
     )
     assert hits == ["functions/text.py"], hits
+
+
+def test_banded_lsh_core_is_spelled_only_in_operators_dedup():
+    """The banded-LSH join's distinct token-hash set and its
+    first-colliding-band gate live in operators/dedup.py; the persisted
+    index, its stream writer and the pHash query call its helpers."""
+    for needle in ("array_distinct(token_hashes(", "prev{p}"):
+        hits = sorted(str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if needle in p.read_text())
+        assert hits == ["operators/dedup.py"], (needle, hits)
