@@ -608,8 +608,8 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             if partition_by is None:
                 # Dims are dimension-sized: landing them as one file per
                 # write avoids the small-files tax on every downstream
-                # broadcast read (38 part files for a 16k-row dim
-                # measured locally). repartition, NOT coalesce —
+                # broadcast read (otherwise one part file per upstream
+                # partition). repartition, NOT coalesce —
                 # coalesce(1) would propagate up and run the parallel
                 # surrogate-key window on one partition; the explicit
                 # exchange keeps upstream parallel and only the
@@ -665,8 +665,8 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # NO repartition before the partitioned write: the MTD window
         # already leaves the fact hash-partitioned by (year, month),
         # which is year-clustered too — each writer task owns whole year
-        # directories, just at month granularity (54 files vs 7 at sf0.1,
-        # but ~15% faster: an extra full-fact exchange costs more than 47
+        # directories, just at month granularity (more files than one per
+        # year, but no extra full-fact exchange, which costs more than the
         # extra files). This is also the cluster posture:
         # repartition("year") would collapse each year to ONE writer task
         # (7 hot tasks at any scale), while the (year, month) layout keeps

@@ -34,15 +34,15 @@ TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Lazy — nothing is read until an action runs.
 
-    The events table stores ``ts`` as parquet TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects outright. Read it as raw int64
-    nanoseconds (legacy conf) and convert with exact integer division —
-    NOT float division: epoch-nanos exceed 2^53, doubles would corrupt
-    timestamps. DuckDB truncates nanos->micros the same way, so the
-    oracle agrees.
+    An events file may store ``ts`` as parquet TIMESTAMP(NANOS), which
+    Spark's vectorized reader rejects outright. The engine session reads
+    such a column as raw int64 nanoseconds (``session.get_spark`` sets
+    the legacy conf), and it is converted here with exact integer
+    division — NOT float division: epoch-nanos exceed 2^53, doubles
+    would corrupt timestamps. DuckDB truncates nanos->micros the same
+    way, so the oracle agrees.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -75,14 +75,13 @@ def ensure_parallelism(df, min_parts: int | None = None):
     what spark.sql.files.maxPartitionBytes says — and every CPU-heavy
     map fused onto that scan (minhash signature folds, charlm scoring,
     PassJoin segment generation, cluster assignment, mapInPandas decode)
-    runs on ONE core. Measured on the 4x scale corpus: the whole MinHash
-    pipeline collapsed into a single 104-second task while 31 cores sat
-    idle. The guard keeps this a no-op exactly when it should be: a
-    100 TB table arrives in thousands of row groups, already at or above
-    session parallelism, so no shuffle is added at scale — only the
-    small-input regime pays one cheap round-robin exchange of the raw
-    rows. Row order is not part of any operator's contract, so results
-    are unchanged (oracle sweeps stay green).
+    runs on ONE core while the others sit idle. The guard keeps this a
+    no-op exactly when it should be: a 100 TB table arrives in thousands
+    of row groups, already at or above session parallelism, so no
+    shuffle is added at scale — only the small-input regime pays one
+    cheap round-robin exchange of the raw rows. Row order is not part of
+    any operator's contract, so results are unchanged (oracle sweeps stay
+    green).
     """
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism

@@ -85,8 +85,9 @@ def read_events_stream(
     ts — the footer genuinely cannot say whether they are nanos or
     micros) fall back to the magnitude heuristic: abs(ts) >= 1e17 means
     nanos, valid for 1973..5138. Files arriving after stream build are
-    also heuristic-tier (their footers were never seen)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    also heuristic-tier (their footers were never seen). Declared
+    TIMESTAMP(NANOS) files read as raw nanos because the engine session
+    sets ``spark.sql.legacy.parquet.nanosAsLong`` (``session.get_spark``)."""
     # File-stream sources need a directory basePath; the testdata ships one
     # flat file per table, so stream the directory with a glob filter.
     reader = spark.readStream.schema(EVENTS_RAW_SCHEMA).option(

@@ -10,6 +10,7 @@ import re
 import pytest
 from conftest import PARITY_SF_DIR
 
+from film_media_etl_spark.etl import star
 from film_media_etl_spark.etl.star import build_fact_sales
 from film_media_etl_spark.plans import assert_read_schema_pruned, physical_plan, plan_summary
 from film_media_etl_spark.queries import all_queries
@@ -39,6 +40,21 @@ def test_fact_build_is_parallel_and_broadcast(spark):
     assert m, "fact surrogate key is not a bucket-partitioned row_number"
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert f"Exchange hashpartitioning({m.group(1)}, {n})" in plan
+
+
+def test_star_rebuild_compiles_no_new_classes(spark):
+    """A second build_star over the same input reuses every generated
+    class from the first: Spark's codegen cache (sized in
+    session.get_spark) holds the build's whole class set, so the rebuild
+    pays no Janino compiles, on the driver or inside tasks. With Spark's
+    default cache of 100 classes a rebuild recompiled most of them."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    star._STAR_CACHE.clear()
+    star.build_star(spark, PARITY_SF_DIR)
+    star._STAR_CACHE.clear()
+    before = compiles.getCount()
+    star.build_star(spark, PARITY_SF_DIR)
+    assert compiles.getCount() - before == 0
 
 
 def test_bm25_topk_and_pruned_scan(spark):

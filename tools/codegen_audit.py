@@ -13,12 +13,19 @@ each `Failed to compile` line to the query that was executing when it fired
 (queries run strictly sequentially, each bracketed by a marker line printed
 to stderr from the Python side).
 
+Each query runs twice in a row. The tool prints, per query, how many
+classes its second run compiled (the delta of Spark's CodegenMetrics
+compile count). A query that compiles on its second run builds generated
+code that differs from run to run, so Spark's codegen cache never serves
+it and a long-lived session pays its compiles on every execution.
+
 Usage:
     python tools/codegen_audit.py [--sf /root/testdata/sf0.001] [names ...]
 
-Exit code 1 if any query triggered a fallback. Codegen size is a property
-of the plan, not the data volume, so the smallest SF is the default — the
-sweep is plan-coverage, not a benchmark.
+Exit code 1 if any query triggered a fallback or raised; recompiles are
+reported only. Codegen size is a property of the plan, not the data
+volume, so the smallest SF is the default — the sweep is plan-coverage,
+not a benchmark.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ def child(sf_dir: str, names: list[str]) -> None:
 
     spark = get_spark("codegen-audit", cpus=8)
 
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     qs = all_queries()
     todo = names or sorted(qs)
     for name in todo:
@@ -44,6 +52,12 @@ def child(sf_dir: str, names: list[str]) -> None:
         print(f"@@QUERY {name}", file=sys.stderr, flush=True)
         try:
             qs[name](spark, sf_dir).count()
+            # Second run: a fallback repeats here, so its log lines are
+            # not attributed again.
+            print("@@RERUN", file=sys.stderr, flush=True)
+            before = compiles.getCount()
+            qs[name](spark, sf_dir).count()
+            print(f"@@RECOMPILED {name} {compiles.getCount() - before}", file=sys.stderr, flush=True)
         except Exception as exc:  # noqa: BLE001 — report, keep sweeping
             print(f"@@ERROR {name} {type(exc).__name__}: {exc}", file=sys.stderr, flush=True)
     print("@@DONE", file=sys.stderr, flush=True)
@@ -63,15 +77,25 @@ def main() -> int:
     proc = subprocess.run(cmd, stderr=subprocess.PIPE, text=True, check=False)
     current = None
     fallbacks: dict[str, int] = {}
+    recompiled: dict[str, int] = {}
     errors: list[str] = []
     for line in proc.stderr.splitlines():
         m = re.match(r"@@QUERY (\S+)", line)
+        r = re.match(r"@@RECOMPILED (\S+) (\d+)", line)
         if m:
             current = m.group(1)
+        elif line.startswith("@@RERUN"):
+            current = None
+        elif r:
+            recompiled[r.group(1)] = int(r.group(2))
         elif line.startswith("@@ERROR"):
             errors.append(line[len("@@ERROR ") :])
         elif "CodeGenerator: Failed to compile" in line and current:
             fallbacks[current] = fallbacks.get(current, 0) + 1
+    for name, cnt in sorted(recompiled.items()):
+        print(f"RECOMPILED {name}: {cnt} class(es) on the second run")
+    print(f"{sum(1 for c in recompiled.values() if c)} of {len(recompiled)} queries "
+          f"recompiled on their second run ({sum(recompiled.values())} classes)")
     for name, cnt in sorted(fallbacks.items()):
         print(f"FALLBACK {name}: {cnt} failed compilation(s)")
     for e in errors:
