@@ -48,6 +48,8 @@ twin of the whole pipeline so any star query is oracle-checkable.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,6 +57,9 @@ from ..functions.dates import month_name, smart_date_key, week_of_year_noniso
 from ..functions.money import AGG_DECIMAL, ROW_DECIMAL, dec
 from ..sources import load_table
 from .reference_semantics import fact_key_columns, offset_music_id, resolve_fact_keys
+
+# _global_index's stats: (lo, span, cumulative bucket offsets, total rows).
+IndexStats = tuple[int, int, dict[int, int], int]
 
 # ---------------------------------------------------------------------------
 # Spark builders
@@ -122,27 +127,12 @@ def build_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dim_customer: film ∪ music customers with surrogate keys in source
-    load order (film block first, like the reference's sequential load,
-    ` loadAnalyticsDB...R`:215-302)."""
-    both = _geo_chain(spark, sf_dir, "film").unionByName(_geo_chain(spark, sf_dir, "music"))
-    # Surrogate keys in (customer_type, customer_id) order WITHOUT a
-    # single-partition global window (#customers at warehouse scale is
-    # dim-sized but unbounded). Each source is indexed over ITS OWN key
-    # range and the music block is offset by the film row count —
-    # equivalent to one row_number over the two-column sort ('film' <
-    # 'music', ids unique per source). NOT a single index over
-    # sort_id = id + (music ? 2^40 : 0): a uniform bucket split over a
-    # range dominated by the 2^40 type offset puts every film row in
-    # bucket 0 and every music row in the last bucket — two
-    # single-partition sorts, exactly the bottleneck _global_index exists
-    # to remove. Per-source ranges are dense, so the buckets stay
-    # balanced within each source.
-    # The index stats need only the id DISTRIBUTION — collect them from a
-    # key-only projection semi-joined against the geo chain's dimension
-    # keys (exactly the rows the inner joins keep, at 1-column scan cost)
-    # instead of running the 4-way join for them.
+def customer_index_keys(spark: SparkSession, sf_dir: str) -> list[tuple[DataFrame, str]]:
+    """The key-distribution plans feeding dim_customer's two
+    surrogate-key indexes, as ``prepare_global_index`` pairs (film, then
+    music): each source's ids semi-joined against the geo chain's
+    dimension keys — exactly the rows the inner joins keep, at 1-column
+    scan cost — instead of the 4-way join itself."""
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     valid_nations = n.join(
@@ -166,8 +156,36 @@ def build_dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(offset_music_id(F.col("s_suppkey")).alias("_sort_id"))
     )
-    film_stats = prepare_global_index(film_ids, "_sort_id")
-    music_stats = prepare_global_index(music_ids, "_sort_id")
+    return [(film_ids, "_sort_id"), (music_ids, "_sort_id")]
+
+
+def build_dim_customer(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    index_stats: list[IndexStats] | None = None,
+) -> DataFrame:
+    """dim_customer: film ∪ music customers with surrogate keys in source
+    load order (film block first, like the reference's sequential load,
+    ` loadAnalyticsDB...R`:215-302). ``index_stats`` is
+    ``prepare_global_index`` over ``customer_index_keys`` (film, music);
+    it is collected here when not given."""
+    both = _geo_chain(spark, sf_dir, "film").unionByName(_geo_chain(spark, sf_dir, "music"))
+    # Surrogate keys in (customer_type, customer_id) order WITHOUT a
+    # single-partition global window (#customers at warehouse scale is
+    # dim-sized but unbounded). Each source is indexed over ITS OWN key
+    # range and the music block is offset by the film row count —
+    # equivalent to one row_number over the two-column sort ('film' <
+    # 'music', ids unique per source). NOT a single index over
+    # sort_id = id + (music ? 2^40 : 0): a uniform bucket split over a
+    # range dominated by the 2^40 type offset puts every film row in
+    # bucket 0 and every music row in the last bucket — two
+    # single-partition sorts, exactly the bottleneck _global_index exists
+    # to remove. Per-source ranges are dense, so the buckets stay
+    # balanced within each source.
+    if index_stats is None:
+        index_stats = prepare_global_index(customer_index_keys(spark, sf_dir))
+    film_stats, music_stats = index_stats
     film_keyed = _global_index(
         both.where(F.col("customer_type") == "film"),
         ["customer_id"],
@@ -219,16 +237,24 @@ def build_dim_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unknown.unionByName(ranked)
 
 
-def build_dim_product(spark: SparkSession, sf_dir: str) -> DataFrame:
+def build_dim_product(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    index_stats: IndexStats | None = None,
+) -> DataFrame:
     """dim_product from part: truncated names (substr 1..255,
     ` loadAnalyticsDB...R`:358), brand as category, genre NULL (film side
-    of createStarSchema...R:102-112)."""
+    of createStarSchema...R:102-112). ``index_stats`` is
+    ``prepare_global_index`` over ``part.p_partkey``; it is collected
+    here when not given."""
     p = load_table(spark, sf_dir, "part")
     # Parallel surrogate keys (see build_dim_customer) — the product dim
     # is catalog-sized, the one dim most likely to outgrow a single
     # partition at warehouse scale.
-    stats = prepare_global_index(p.select("p_partkey"), "p_partkey")
-    return _global_index(p, ["p_partkey"], "p_partkey", stats, out_col="_pk").select(
+    if index_stats is None:
+        index_stats = prepare_global_index(p.select("p_partkey"), "p_partkey")
+    return _global_index(p, ["p_partkey"], "p_partkey", index_stats, out_col="_pk").select(
         F.col("_pk").cast("int").alias("product_key"),
         F.col("p_partkey").alias("product_id"),
         F.substring("p_name", 1, 255).alias("product_name"),
@@ -242,7 +268,7 @@ def _global_index(
     df: DataFrame,
     order_cols: list[str],
     leading_key: str,
-    stats: tuple[int, int, dict[int, int], int],
+    stats: IndexStats,
     *,
     out_col: str = "_idx",
 ) -> DataFrame:
@@ -265,11 +291,7 @@ def _global_index(
     lo, span, offsets = stats[0], stats[1], stats[2]
     if not offsets:  # empty input: emit the schema, no rows to index
         return df.withColumn(out_col, F.lit(None).cast("long"))
-
-    def bucket(c):
-        return F.floor((c - F.lit(lo)) / F.lit(span)).cast("int")
-
-    dfb = df.withColumn("_bucket", bucket(F.col(leading_key)))
+    dfb = df.withColumn("_bucket", _bucket(F.col(leading_key), lo, span))
     omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
     w = Window.partitionBy("_bucket").orderBy(*order_cols)
     return dfb.withColumn(
@@ -277,43 +299,88 @@ def _global_index(
     ).drop("_bucket")
 
 
+def _bucket(key, lo: int, span: int):
+    """The index bucket of ``key``, computed in the key's own type (a
+    decimal key buckets by its exact value); NULL for a NULL key."""
+    return F.floor((key - F.lit(lo)) / F.lit(span)).cast("int")
+
+
 def prepare_global_index(
-    sdf: DataFrame, leading_key: str, *, nbuckets: int = 64
-) -> tuple[int, int, dict[int, int], int]:
-    """Collect ``_global_index``'s stats over ``sdf[leading_key]`` with
-    two small jobs (key range, per-bucket counts — <= nbuckets + 1 rows
-    to the driver) and return (lo, span, cumulative offsets, total rows).
-    ``sdf`` must hold exactly the leading keys of the rows to be indexed;
-    any plan with that key multiset will do (e.g. a key-only semi-join
-    instead of a full-width join). At cluster scale raise ``nbuckets`` to
-    ~2-3x total cores.
+    sdf: DataFrame | list[tuple[DataFrame, str]],
+    leading_key: str | None = None,
+    *,
+    nbuckets: int = 64,
+) -> IndexStats | list[IndexStats]:
+    """Collect ``_global_index``'s stats over ``sdf[leading_key]`` and
+    return (lo, span, cumulative offsets, total rows). ``sdf`` must hold
+    exactly the leading keys of the rows to be indexed; any plan with
+    that key multiset will do (e.g. a key-only semi-join instead of a
+    full-width join). At cluster scale raise ``nbuckets`` to ~2-3x total
+    cores.
+
+    Called with a list of ``(frame, leading_key)`` pairs instead, it
+    returns one stats tuple per pair, in order — exactly what a call per
+    pair returns.
+
+    Either way it runs two Spark actions in all, however many keys: the
+    key ranges (one row) and then the per-bucket counts (<= nbuckets + 1
+    rows per key) to the driver. With AQE each action is a shuffle-stage
+    job plus a result job, and each broadcast in a key plan adds one:
+    build_star's four keys take 10 jobs, against 26 for a call per key.
 
     NULL keys get no bucket and are not counted in ``total``. An EMPTY
     (or all-NULL) input returns (0, 1, {}, 0) rather than raising —
     reachable from thread-pooled callers where a TypeError would surface
-    only at .result()."""
-    lo, hi = sdf.agg(F.min(leading_key), F.max(leading_key)).first()
-    if lo is None:
-        return 0, 1, {}, 0
-    lo = int(lo)
-    span = max(1, ((int(hi) - lo) // nbuckets) + 1)
-    counts = (
-        sdf.groupBy(
-            F.floor((F.col(leading_key) - F.lit(lo)) / F.lit(span))
-            .cast("int")
-            .alias("_bucket")
+    only at .result(); when every input is empty the second action is
+    skipped."""
+    pairs = sdf if leading_key is None else [(sdf, leading_key)]
+    # Action 1: every key's min and max in one row. Pair i fills column
+    # _k{i} and NULLs the others, so each key keeps its own type.
+    types = [df.schema[key].dataType for df, key in pairs]
+    spread = [
+        df.select(
+            *[
+                (F.col(key) if j == i else F.lit(None).cast(t)).alias(f"_k{j}")
+                for j, t in enumerate(types)
+            ]
         )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in sorted(
-        (r for r in counts if r["_bucket"] is not None), key=lambda r: r["_bucket"]
-    ):
-        offsets[row["_bucket"]] = acc
-        acc += row["cnt"]
-    return lo, span, offsets, acc
+        for i, (df, key) in enumerate(pairs)
+    ]
+    ranges = reduce(DataFrame.unionAll, spread).agg(
+        *[f(f"_k{i}") for i in range(len(pairs)) for f in (F.min, F.max)]
+    ).first()
+    lo_span: dict[int, tuple[int, int]] = {}
+    for i in range(len(pairs)):
+        lo, hi = ranges[2 * i], ranges[2 * i + 1]
+        if lo is not None:
+            lo_span[i] = (int(lo), max(1, ((int(hi) - int(lo)) // nbuckets) + 1))
+    # Action 2: per-bucket counts of every non-empty key, tagged by pair.
+    counts: dict[int, list[tuple[int, int]]] = {i: [] for i in lo_span}
+    if lo_span:
+        tagged = reduce(
+            DataFrame.unionAll,
+            [
+                pairs[i][0].select(
+                    F.lit(i).alias("_tag"), _bucket(F.col(pairs[i][1]), lo, span).alias("_bucket")
+                )
+                for i, (lo, span) in lo_span.items()
+            ],
+        )
+        for row in tagged.groupBy("_tag", "_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect():
+            if row["_bucket"] is not None:
+                counts[row["_tag"]].append((row["_bucket"], row["cnt"]))
+    out: list[IndexStats] = []
+    for i in range(len(pairs)):
+        if i not in lo_span:
+            out.append((0, 1, {}, 0))
+            continue
+        offsets: dict[int, int] = {}
+        acc = 0
+        for b, cnt in sorted(counts[i]):
+            offsets[b] = acc
+            acc += cnt
+        out.append((*lo_span[i], offsets, acc))
+    return out if leading_key is None else out[0]
 
 
 # Canonical total order for the fact surrogate key: every lineitem column,
@@ -356,7 +423,7 @@ def build_fact_sales(
     dim_customer: DataFrame | None = None,
     dim_location: DataFrame | None = None,
     dim_product: DataFrame | None = None,
-    index_stats: tuple[int, int, dict[int, int], int] | None = None,
+    index_stats: IndexStats | None = None,
 ) -> DataFrame:
     """fact_sales: one row per lineitem with resolved dimension keys,
     denormalized pruning columns (year/quarter/month/product_type/country,
@@ -588,7 +655,13 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     once, the 15-report workload reads columnar warehouse files with
     partition pruning, instead of re-running the join+window pipeline per
     report (report r03's derived-table subquery would otherwise recompute
-    the whole fact twice in one query)."""
+    the whole fact twice in one query).
+
+    A build whose sources were already read in the session (a rebuild
+    after clearing the memo) runs at most 40 Spark jobs — 39 at sf0.01
+    and sf0.001, pinned by
+    tests/test_plan_pins.py::test_star_rebuild_job_ceiling; a session's
+    first build adds one schema-inference job per source table."""
     import os
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
@@ -633,27 +706,36 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # ` loadAnalyticsDB...R`:main) and also the cheaper plan: the fact
         # job broadcasts three tiny parquet scans instead of re-running
         # each dim's join+window lineage inline.
-        # The four dim builds (their index-stats jobs included) and the
-        # fact's index stats are independent, so they run as CONCURRENT
-        # Spark jobs in one pool (job submission is thread-safe; the
-        # scheduler interleaves their stages): the wall time before the
-        # fact job is the slowest of them, not the sum.
-        dim_builders = {
-            "dim_date": build_dim_date,
-            "dim_customer": build_dim_customer,
-            "dim_location": build_dim_location,
-            "dim_product": build_dim_product,
-        }
-        with ThreadPoolExecutor(max_workers=len(dim_builders) + 1) as pool:
-            stats_fut = pool.submit(
-                prepare_global_index, fact_index_stats(spark, sf_dir), "l_orderkey"
-            )
+        # One prepare_global_index call collects the stats of all four
+        # surrogate keys (fact, film and music customers, product) in two
+        # actions. It runs in the same pool as the four dim builds, which
+        # are independent CONCURRENT Spark jobs (job submission is
+        # thread-safe; the scheduler interleaves their stages): the date
+        # and location dims build while the stats run, the customer and
+        # product dims as soon as they land.
+        index_keys = [
+            (fact_index_stats(spark, sf_dir), "l_orderkey"),
+            *customer_index_keys(spark, sf_dir),
+            (load_table(spark, sf_dir, "part").select("p_partkey"), "p_partkey"),
+        ]
+        with ThreadPoolExecutor(max_workers=5) as pool:  # stats + 4 dims
+            stats = pool.submit(prepare_global_index, index_keys)
+            dim_builders = {
+                "dim_date": lambda: build_dim_date(spark, sf_dir),
+                "dim_customer": lambda: build_dim_customer(
+                    spark, sf_dir, index_stats=stats.result()[1:3]
+                ),
+                "dim_location": lambda: build_dim_location(spark, sf_dir),
+                "dim_product": lambda: build_dim_product(
+                    spark, sf_dir, index_stats=stats.result()[3]
+                ),
+            }
             futures = {
-                name: pool.submit(lambda n, b: _write(n, b(spark, sf_dir)), name, builder)
+                name: pool.submit(lambda n, b: _write(n, b()), name, builder)
                 for name, builder in dim_builders.items()
             }
             tables = {name: fut.result() for name, fut in futures.items()}
-            fact_stats = stats_fut.result()
+            fact_stats = stats.result()[0]
         fact = build_fact_sales(
             spark,
             sf_dir,

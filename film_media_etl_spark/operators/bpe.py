@@ -25,11 +25,10 @@ vocabulary-bound SEQUENTIAL algorithm. So the distributed plan is
 that runs the classic in-memory BPE loop (pair Counter, argmax with
 lexicographic tie-break, greedy leftmost non-overlapping application)
 over the (word, n) rows and emits the k-row merge table. ONE action
-total — 3 job ids under AQE (stage jobs), measured by job group,
-versus ~17 for the loop it replaces — independent of k; measured
-2.4-2.8s -> ~1.05s solo at sf0.1 (k=8), and at cluster scheduler
-latency the gap is k x round-trip. Pinned in
-tests/test_function_models.py::test_bpe_learner_job_count_is_constant. The single task is the standard single-node residue of
+total — at most 5 jobs under AQE whatever k is, pinned in
+tests/test_function_models.py::test_bpe_learner_job_count_is_constant,
+versus ~2 per merge for the loop it replaces, so at cluster scheduler
+latency the gap is k x round-trip. The single task is the standard single-node residue of
 tokenizer training (HuggingFace/SentencePiece collect word counts,
 then train locally); a 100 TB corpus's (word, n) vocabulary is
 machine-sized, and the standard min-count prune (``min_count``) bounds
@@ -160,8 +159,8 @@ def apply_bpe_merges(docs: DataFrame, merges, *, text_col: str = "text", id_col:
     merge folds (the expensive per-word function) run ONCE per DISTINCT
     word, then per-doc counts come from a (doc, word) aggregate joined
     against the tiny (word -> bpe_len) table. Re-running the folds on
-    every word OCCURRENCE was measured 5x slower at sf0.1 and scales
-    with corpus bytes instead of vocabulary size. Each merge step is
+    every word OCCURRENCE would scale with corpus bytes instead of
+    vocabulary size. Each merge step is
     isolated behind an explode(array(...)) Generate barrier so the k
     folds stay separate codegen'd projections instead of one collapsed
     expression that would blow the 64KB JVM method limit. Docs with

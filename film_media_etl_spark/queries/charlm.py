@@ -57,10 +57,10 @@ def ext_charlm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     only corpus-sized shuffle. The model then compiles to a DENSE
     lookup array indexed by ascii(c1)*128 + ascii(c2) (one broadcast
     row), and scoring is a pure map-side fold per document — each
-    bigram is two ascii() calls and an O(1) element_at. Measured at
-    sf0.1: 3.7s dense fold vs 6.1s explode+broadcast-join+groupBy vs
-    8.2s folding over a Spark MAP (whose element_at is a LINEAR scan —
-    the trap this dense array exists to avoid). Per-bigram logps are
+    bigram is two ascii() calls and an O(1) element_at — no per-bigram
+    explode, join or re-aggregate, and no fold over a Spark MAP (whose
+    element_at is a LINEAR scan — the trap this dense array exists to
+    avoid). Per-bigram logps are
     exact decimals, so fold order is irrelevant. The 128-wide code
     space is only valid for an ascii corpus — Spark's ascii() returns
     the full code point, so one non-ascii char indexes past the dense
@@ -100,8 +100,7 @@ def ext_charlm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bigrams via zip_with over the split char array — element access is
     # O(1), the whole row O(len). The tempting spelling
     # transform(sequence(...), i -> substr(t, i, 2)) is O(len^2): each
-    # substr seeks from the string head (UTF8String is variable-width),
-    # measured 4.1s -> 0.6s for the count stage at sf0.1.
+    # substr seeks from the string head (UTF8String is variable-width).
     bgs = F.expr(
         "zip_with(slice(split(t, ''), 1, length(t) - 1),"
         "         slice(split(t, ''), 2, length(t) - 1),"

@@ -196,8 +196,8 @@ def _pagerank_exact_oracle() -> str:
     Every r{k} is AS MATERIALIZED: each iteration references its
     predecessor twice (contribution join + dangling-mass scalar), and
     DuckDB's default CTE inlining would re-evaluate the whole chain
-    2^iters times (measured 187s at sf0.01; materialized: sub-second —
-    the SQL analogue of the Spark loop's localCheckpoint)."""
+    2^iters times; materialized, each iteration is evaluated once — the
+    SQL analogue of the Spark loop's localCheckpoint."""
     ctes = [
         """tr AS (
       SELECT user_id, event_type AS src,

@@ -35,13 +35,12 @@ ANSI on): empty gram lists guard the descending-sequence pitfall and
 every division is zero-guarded. PERFORMANCE SHAPE (learned the hard
 way in-round): higher-order-function lambdas re-evaluate any OUTER
 array expression they reference once PER ELEMENT — an element_at/get
-peek over the sorted gram array turned the dup scan O(m^2 * build)
-and cost 276s at sf0.1. The sorted arrays are therefore materialized
+peek over the sorted gram array turned the dup scan O(m^2 * build).
+The sorted arrays are therefore materialized
 ONCE per row behind a Generate barrier (the lang_quality_barrier
 pattern), and duplicate detection is a single fold over a zip of the
 sorted array with its own tail — no lambda ever indexes an outer
-array. Post-fix, solo-measured: 3.5s at sf0.1, 5.3s at 4x, 14.7s
-at 16x data.
+array.
 """
 
 from __future__ import annotations

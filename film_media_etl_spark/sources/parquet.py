@@ -13,8 +13,10 @@ Live-database extraction (the reference's SQLite/MySQL role) maps to
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Driver-generated test tables (TESTDATA.md). One parquet file per table.
 TABLES = (
@@ -31,8 +33,36 @@ TABLES = (
 )
 
 
+# (applicationId, path) -> ((length, modification time), schema). The
+# file version is part of the value, so a table rewritten at the same
+# path is inferred again instead of read with a stale schema.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple[int, int], StructType]] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and file version. Inference starts a one-task footer job on
+    every read; a read with a given schema starts none."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    except Py4JJavaError:  # missing table: let Spark raise its own error
+        return spark.read.parquet(path)
+    version = (status.getLen(), status.getModificationTime())
+    key = (spark.sparkContext.applicationId, path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (version, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Lazy — nothing is read until an action runs.
+
+    The first read of a table version in a session infers its schema
+    (one Spark job); every later read of that version starts no job.
 
     An events file may store ``ts`` as parquet TIMESTAMP(NANOS), which
     Spark's vectorized reader rejects outright. The engine session reads
@@ -42,12 +72,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     would corrupt timestamps. DuckDB truncates nanos->micros the same
     way, so the oracle agrees.
     """
-    if name == "events":
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

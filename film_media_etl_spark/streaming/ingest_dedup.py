@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import tokens
 from ..operators.dedup import simhash_bits
+from ..sources import load_table
 
 
 def read_documents_stream(
@@ -55,8 +56,8 @@ def read_documents_stream(
     a static scan — never inference on a stream). Set
     ``max_files_per_trigger`` to force one micro-batch per file drop —
     tests use it to actually exercise multi-batch merge paths."""
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    reader = spark.readStream.schema(static.schema).option(
+    schema = load_table(spark, sf_dir, "documents").schema
+    reader = spark.readStream.schema(schema).option(
         "pathGlobFilter", "documents*.parquet"
     )
     if max_files_per_trigger is not None:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.ann_index import assign_cells
 from ..operators.index_manifest import folded_through
+from ..sources import load_table
 
 
 def read_embeddings_stream(
@@ -40,8 +41,8 @@ def read_embeddings_stream(
 ) -> DataFrame:
     """File-source stream over the embeddings parquet (schema pinned
     from a static scan, the read_documents_stream convention)."""
-    static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    reader = spark.readStream.schema(static.schema).option(
+    schema = load_table(spark, sf_dir, "embeddings").schema
+    reader = spark.readStream.schema(schema).option(
         "pathGlobFilter", "embeddings*.parquet"
     )
     if max_files_per_trigger is not None:

@@ -193,6 +193,31 @@ def test_global_index_null_leading_key_keeps_row(spark):
     assert len(out) == 2 and all(r["idx"] is None for r in out)
 
 
+def test_prepare_global_index_many_keys_equals_per_key_calls(spark):
+    """One multi-key prepare_global_index call returns exactly what a
+    call per key returns — an empty frame, a NULL leading key and a
+    decimal key (bucketed in its own type) included."""
+    from decimal import Decimal
+
+    from film_media_etl_spark.etl.star import prepare_global_index
+
+    longs = spark.createDataFrame(
+        [(3,), (None,), (1,), (400,), (7,), (None,)], "k long"
+    )
+    empty = spark.range(0).select(F.col("id").alias("k"))
+    decs = spark.createDataFrame(
+        [(Decimal("901.23"),), (Decimal("55.10"),), (Decimal("1234.99"),), (Decimal("55.10"),)],
+        "p decimal(12,2)",
+    )
+    ints = spark.range(1000).select((F.col("id") * 7 % 1003).cast("int").alias("i"))
+    pairs = [(longs, "k"), (empty, "k"), (decs, "p"), (ints, "i")]
+    many = prepare_global_index(pairs, nbuckets=5)
+    assert many == [prepare_global_index(df, key, nbuckets=5) for df, key in pairs]
+    assert many[1] == (0, 1, {}, 0)
+    assert many[0][3] == 4 and many[2][3] == 4 and many[3][3] == 1000
+    assert prepare_global_index([(empty, "k")]) == [(0, 1, {}, 0)]
+
+
 def test_charlm_unicode_corpus_oracle_parity(spark, tmp_path):
     """ext_charlm_quality on a NON-ascii corpus: the dense 128^2 lookup
     is invalid there (Spark ascii() returns full code points — one CJK

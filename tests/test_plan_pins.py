@@ -14,6 +14,7 @@ from film_media_etl_spark.etl import star
 from film_media_etl_spark.etl.star import build_fact_sales
 from film_media_etl_spark.plans import assert_read_schema_pruned, physical_plan, plan_summary
 from film_media_etl_spark.queries import all_queries
+from film_media_etl_spark.sources import load_table
 
 
 def _q(name, spark):
@@ -57,6 +58,62 @@ def test_star_rebuild_compiles_no_new_classes(spark):
     assert compiles.getCount() - before == 0
 
 
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs (outside any job group) started while ``fn`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_load_table_infers_each_schema_once(spark):
+    """The first read of a source table in a session infers its schema
+    (a footer job); a second read of the same file starts no job."""
+    load_table(spark, PARITY_SF_DIR, "nation")
+    assert _jobs_run(spark, lambda: load_table(spark, PARITY_SF_DIR, "nation")) == 0
+
+
+def test_load_table_rereads_schema_of_rewritten_table(spark, tmp_path):
+    """A table rewritten at the same path is read with its new schema,
+    not the one inferred for the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [3.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 3.5)]
+
+
+def test_star_rebuild_job_ceiling(spark):
+    """A build_star rebuild runs at most 40 Spark jobs: every source
+    schema comes from the session's memo, and one prepare_global_index
+    call collects all four surrogate-key stats in two actions (it was
+    one inference job per table read and two actions per key: 77
+    jobs)."""
+    star._STAR_CACHE.clear()
+    star.build_star(spark, PARITY_SF_DIR)
+    star._STAR_CACHE.clear()
+    assert _jobs_run(spark, lambda: star.build_star(spark, PARITY_SF_DIR)) <= 40
+
+
+def test_token_budget_guard_reuses_the_documents_exchange(spark):
+    """ext_token_budget_sample's value-neutral guard
+    (0 * min(xxhash64(h, doc_id))) keeps the bin aggregate's exchange
+    subtree equal to the window's, so AQE reuses the repartition
+    exchange: the executed plan scans documents once."""
+    df = _q("ext_token_budget_sample", spark)
+    df.collect()  # finalize AQE
+    plan = physical_plan(df)
+    final = plan[plan.index("== Final Plan =="):plan.index("\n+- == Initial Plan ==")]
+    scans = re.findall(r"FileScan parquet [^\n]*/documents\.parquet", final)
+    assert len(scans) == 1, scans
+    assert re.search(r"ReusedExchange [^\n]*REPARTITION_BY_COL", final)
+
+
 def test_bm25_topk_and_pruned_scan(spark):
     """Top-20 must plan as TakeOrderedAndProject (distributed top-k, no
     global sort). The documents scan lives in the checkpointed per-doc
@@ -65,7 +122,6 @@ def test_bm25_topk_and_pruned_scan(spark):
     exchanges — scoring is map-side over the checkpoint plus one 1-row
     broadcast."""
     from film_media_etl_spark.queries.retail_analytics import _bm25_per_doc
-    from film_media_etl_spark.sources import load_table
 
     df = _q("ext_bm25_search", spark)
     plan = physical_plan(df)

@@ -24,3 +24,16 @@ def test_banded_lsh_core_is_spelled_only_in_operators_dedup():
     for needle in ("array_distinct(token_hashes(", "prev{p}"):
         hits = sorted(str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if needle in p.read_text())
         assert hits == ["operators/dedup.py"], (needle, hits)
+
+
+def test_source_tables_are_read_only_through_load_table():
+    """A source table is read through sources.load_table, which infers
+    its schema once per session and file version; a direct
+    ``spark.read.parquet`` of a source path pays a schema-inference job
+    on every call."""
+    hits = sorted(
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if 'read.parquet(f"{sf_dir}/' in p.read_text()
+    )
+    assert set(hits) <= {"sources/parquet.py"}, hits
