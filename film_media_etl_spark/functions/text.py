@@ -56,20 +56,65 @@ def token_hashes(text: Column | str) -> Column:
     return F.transform(token_set(text), lambda t: F.xxhash64(t))
 
 
+def ngrams(toks: Column | str, n: int) -> Column:
+    """Ordered word n-grams of a token array, as space-joined strings,
+    repeats kept; the only Spark spelling of the word n-gram
+    (tests/test_source_rules.py). Arrays shorter than n, and NULL,
+    yield [] — the explicit guard matters because F.sequence(0, -1)
+    would generate a DESCENDING sequence, not an empty one. ``toks``
+    should be an attribute (a select alias or Generate output), not an
+    inline split: the lambda re-evaluates an outer expression once per
+    gram. ``n`` is a Python int, so the element lambda stays unary
+    (F.transform dispatches on lambda arity: a two-parameter lambda is
+    called as (element, index))."""
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - F.lit(n)),
+        # slice+array_join, NOT n F.get()+concat_ws: one bounds-checked
+        # array copy per gram instead of n element lookups
+        lambda i: F.array_join(F.slice(toks, i + F.lit(1), n), " "),
+    )
+    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
+
+
 def shingles(toks: Column, n: int) -> Column:
-    """Distinct word n-gram shingles of a token-array column, as
-    space-joined strings. Documents shorter than n tokens yield an
-    empty set — the explicit guard matters because F.sequence(1, 0)
-    would generate a DESCENDING sequence, not an empty one. Callers
-    that consume the result per-element downstream should pass a
-    barrier-materialized token column (generate_barrier) so the split
-    isn't re-evaluated per shingle."""
-    starts = F.sequence(F.lit(0), F.size(toks) - F.lit(n))
-    # slice+array_join, NOT n separate F.get()+concat_ws: one bounds-checked
-    # array copy per shingle instead of n element lookups
-    mk = lambda i: F.array_join(F.slice(toks, i + F.lit(1), n), " ")  # noqa: E731
-    return F.when(F.size(toks) >= n, F.array_distinct(F.transform(starts, mk))).otherwise(
-        F.array().cast("array<string>")
+    """Distinct word n-gram shingles: ``array_distinct(ngrams(toks, n))``;
+    [] for NULL or a document shorter than n tokens."""
+    return F.array_distinct(ngrams(toks, n))
+
+
+def adjacent_pairs(arr: Column | str, f) -> Column:
+    """``f(arr[i], arr[i+1])`` for every adjacent pair, in order: the
+    array zipped with its own tail. [] for arrays of fewer than two
+    elements, NULL for NULL. Word bigrams are ``ngrams(toks, 2)``."""
+    m = F.greatest(F.size(arr) - 1, F.lit(0))
+    return F.zip_with(F.slice(arr, 1, m), F.slice(arr, 2, m), f)
+
+
+def top_run(sorted_arr: Column | str) -> Column:
+    """struct<run, value>: the longest run of equal adjacent elements of
+    a sorted, NULL-free array<string> — its length (the top
+    multiplicity; 0 for []) and its element. Ties keep the earliest
+    run, i.e. the smallest element. One left fold; the only spelling
+    of the top-bigram count the curation gates share."""
+
+    def step(acc, x):
+        cur = F.when(x == acc["prev"], acc["cur"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            x.alias("prev"),
+            cur.alias("cur"),
+            F.greatest(acc["run"], cur).alias("run"),
+            F.when(cur > acc["run"], x).otherwise(acc["value"]).alias("value"),
+        )
+
+    none = F.lit(None).cast("string")
+    zero = F.struct(
+        none.alias("prev"), F.lit(0).alias("cur"), F.lit(0).alias("run"), none.alias("value")
+    )
+    return F.aggregate(
+        sorted_arr,
+        zero,
+        step,
+        lambda acc: F.struct(acc["run"].alias("run"), acc["value"].alias("value")),
     )
 
 

@@ -40,7 +40,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import generate_barrier, shingles, token_hashes, token_set, tokens
+from ..functions.text import (
+    adjacent_pairs,
+    generate_barrier,
+    shingles,
+    token_hashes,
+    token_set,
+    tokens,
+)
 from ..sources import ensure_parallelism
 
 
@@ -242,12 +249,6 @@ def _minhash_slots(th: Column, num_hashes: int) -> Column:
         F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes),
         lambda acc, h: F.zip_with(acc, seeds, lambda a, i: F.least(a, F.xxhash64(h, i))),
     )
-
-
-def minhash_signature(text: Column, *, num_hashes: int) -> Column:
-    """array<long> MinHash signature of the text's distinct token-hash
-    set (see _minhash_slots)."""
-    return _minhash_slots(_th(text), num_hashes)
 
 
 def _signatures(docs: DataFrame, id_col: str, text_col: str, num_hashes: int) -> DataFrame:
@@ -905,21 +906,18 @@ def exact_substring_dedup(
     rmc = F.coalesce(F.col("rm"), F.array().cast("array<int>"))
     n = F.size("toks")
     m = F.size(rmc)
-    pair_len = F.greatest(m - 1, F.lit(0))
-    head = F.slice(rmc, 1, pair_len)  # rm[0..m-2]
-    tail = F.slice(rmc, 2, pair_len)  # rm[1..m-1]
     # a removed run starts at rm[0] and wherever the sorted sequence
     # jumps by more than 1; it ends just before each jump and at rm[m-1]
     run_starts = F.concat(
         F.slice(rmc, 1, 1),
         F.filter(
-            F.zip_with(tail, head, lambda c, p: F.when(c != p + 1, c)),
+            adjacent_pairs(rmc, lambda p, c: F.when(c != p + 1, c)),
             lambda x: x.isNotNull(),
         ),
     )
     run_ends = F.concat(
         F.filter(
-            F.zip_with(head, tail, lambda p, c: F.when(c != p + 1, p)),
+            adjacent_pairs(rmc, lambda p, c: F.when(c != p + 1, p)),
             lambda x: x.isNotNull(),
         ),
         F.slice(rmc, F.greatest(m, F.lit(1)), 1),

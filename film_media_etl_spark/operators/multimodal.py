@@ -580,15 +580,13 @@ def render_ppm_textured(
     """Textured variant of render_ppm_media: the extra x*y*13 term makes
     luminance non-monotone in x, so dHash bits carry signal — under the
     smooth formula every row's gray increases by +9 per column except at
-    mod-256 wraps and 71% of the corpus hashes to literally 0 (all 56
-    comparison bits false). Measured on 500 ids: smooth = 71 distinct
-    hashes, largest bucket 355; textured = 93 distinct, largest 22.
+    mod-256 wraps, so most of the corpus hashes to literally 0 (all 56
+    comparison bits false) and a few hashes hold nearly every id.
 
     With corrupt_odd, each ODD id renders its even twin's image with ONE
     pixel strongly bumped (+128 on every channel at a base-keyed
     position) — a deterministic 'corrupted re-encode' whose dHash lands
-    within Hamming<=2 of the original (measured: {0: 26, 1: 149, 2: 25}
-    over 200 twins), giving the Hamming-tolerant near-dup tier a real
+    within Hamming<=2 of the original, giving the Hamming-tolerant near-dup tier a real
     recovery target with a closed-form oracle."""
 
     def batches(it: Iterator) -> Iterator:

@@ -364,12 +364,11 @@ def ext_fuzzy_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     final dedup over TRUE pairs (linear in corpus growth even when a
     saturated name space makes raw candidates quadratic).
 
-    Measured alternative, rejected: a 4-segment DOUBLE-match variant
+    Alternative, rejected: a 4-segment DOUBLE-match variant
     (pigeonhole: 2 edits preserve >= 2 of 4 segments, join on segment
     PAIRS with the exact shift budget |d1|+|d2-d1|+|delta-d2| <= tau)
-    produces identical output but runs 4-7x slower at every scale
-    (72.3s vs 10.8s on the 16x corpus): the
-    probe-side enumeration grows ~10x while segment pairs drawn from
+    produces identical output but runs slower: the probe-side
+    enumeration multiplies while segment pairs drawn from
     copy-blind word interiors still collide, so the candidate reduction
     never pays for the enumeration. Map-side bounded levenshtein is
     simply cheaper than avoiding it."""
@@ -452,8 +451,7 @@ def ext_fuzzy_match_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (<= k-1) and later ones must leave room for the remaining
         # tau+1-k segments to absorb the rest of delta. A strict subset
         # of the naive +-tau enumeration, so completeness is untouched;
-        # it cuts probe rows ~2.5x and raw candidate duplication ~3x
-        # (measured 7.7M -> 2.6M raw candidates at sf0.1) before the
+        # it cuts probe rows and raw candidate duplication before the
         # distinct shuffle, which is the stage that dominates.
         .where(
             (

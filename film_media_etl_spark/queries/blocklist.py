@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import blocklist_hit, blocklist_reason, oracle_blocklist_reason
+from ..functions.text import blocklist_hit, blocklist_reason, ngrams, oracle_blocklist_reason
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -160,25 +160,8 @@ def _gram_array(tk: Column, lengths: list[int]) -> Column:
     attribute (a select alias or Generate output), never an inline
     expression: HOF lambdas re-evaluate outer expressions once PER
     ELEMENT (the repetition_signals O(m^2) trap), so an inline split
-    here would re-tokenize the page per gram.
-
-    NOTE a two-parameter lambda here is a silent trap: F.transform
-    dispatches on Python ARITY, so `lambda i, L=L:` is called as
-    (element, index) and the "default" L becomes the 0-based array
-    index — grams of length 0,1,2,... instead of L. A named helper
-    keeps the element lambda unary (the loop value binds eagerly:
-    F.transform invokes the lambda once, at construction time)."""
-
-    def _grams(L: int) -> Column:
-        return F.when(
-            F.size(tk) - (L - 1) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(tk) - (L - 1)),
-                lambda i: F.array_join(F.slice(tk, i, L), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.array_distinct(F.concat(*[_grams(L) for L in lengths]))
+    here would re-tokenize the page per gram."""
+    return F.array_distinct(F.concat(*[ngrams(tk, L) for L in lengths]))
 
 
 def _blocklist_hits(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import adjacent_pairs, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -97,15 +97,11 @@ def ext_charlm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", F.lower(F.col("text")).alias("t")).where(
         F.length("t") >= 2
     )
-    # Bigrams via zip_with over the split char array — element access is
-    # O(1), the whole row O(len). The tempting spelling
+    # Bigrams as adjacent pairs of the split char array — element access
+    # is O(1), the whole row O(len). The tempting spelling
     # transform(sequence(...), i -> substr(t, i, 2)) is O(len^2): each
     # substr seeks from the string head (UTF8String is variable-width).
-    bgs = F.expr(
-        "zip_with(slice(split(t, ''), 1, length(t) - 1),"
-        "         slice(split(t, ''), 2, length(t) - 1),"
-        " (a, b) -> concat(a, b))"
-    )
+    bgs = adjacent_pairs(F.split("t", ""), lambda a, b: F.concat(a, b))
     # cnt is alphabet²-bounded (~1-10k rows) and referenced by THREE
     # model consumers (tot, the dense array, the non-ascii table);
     # localCheckpoint materializes the one corpus-sized bigram
@@ -270,15 +266,10 @@ def kn_model_parts(docs: DataFrame):
         .select("doc_id", tokens("text").alias("toks"))
         .where(F.size("toks") >= 2)
     )
-    n = F.size("toks")
     bg = t.select(
         "doc_id",
         F.explode(
-            F.zip_with(
-                F.slice(F.col("toks"), 1, n - 1),
-                F.slice(F.col("toks"), 2, n - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
+            adjacent_pairs("toks", lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
     cnt = (

@@ -12,8 +12,8 @@ an exact DuckDB oracle — including the survivor set, whose oracle walks
 the same pair graph with a recursive CTE.
 
 Determinism conventions:
-- token order inside a document is positional (zip_with over adjacent
-  slices), so bigram counts are exact, not sampled;
+- token order inside a document is positional (functions/text.ngrams),
+  so bigram counts are exact, not sampled;
 - every argmax (top bigram, survivor pick) has a total-order tiebreak;
 - quantization uses floor(x*scale + 0.5) — identical double math in
   both engines — instead of engine round() (whose half-way rule
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens, top_run
 from ..operators.dedup import connected_components, token_jaccard_pairs
 from ..sources import ensure_parallelism, load_table
 from .registry import register
@@ -76,90 +76,42 @@ def ext_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition metrics per document: type-token ratio and
     most-repeated-bigram share, plus the pass/fail verdict a curation
     pipeline filters on (Rae et al. 2021, 'Scaling Language Models',
-    table A1 uses exactly these duplicate-n-gram fractions). Bigrams come
-    from zip_with over adjacent array slices — pure JVM higher-order
-    functions, zero Python.
+    table A1 uses exactly these duplicate-n-gram fractions). Bigrams are
+    functions/text.ngrams(toks, 2) — pure JVM higher-order functions,
+    zero Python.
 
-    Optimization round 10 (guide §2.4): every output here is a
-    per-document fact, so the whole query is now ONE map pass — the
-    former spelling exploded bigrams, aggregated by (doc_id, bigram),
-    ran two doc_id windows (rank-1 + total) and joined back to the
-    stats branch (3 exchanges + a sort + 2 scans). The top bigram and
-    its multiplicity are the longest equal-run (earliest on ties —
-    lexicographically smallest, matching the cnt DESC, bg ASC rank) in
-    the SORTED per-doc bigram array, found by one linear fold; the
-    sorted array sits behind a Generate barrier so no lambda
-    re-evaluates it. Docs with zero bigrams are dropped, matching the
-    former inner join against the exploded counts."""
+    Every output is a per-document fact, so the query is ONE map pass
+    with no exchange. The top bigram and its multiplicity are
+    functions/text.top_run over the SORTED per-doc bigram array (the
+    earliest run wins ties — lexicographically smallest, matching the
+    oracle's cnt DESC, bg ASC rank); the sorted array sits behind a
+    Generate barrier so the fold never re-evaluates it. Docs with zero
+    bigrams are dropped, matching the oracle's inner join."""
     from ..functions.text import generate_barrier
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     t = generate_barrier(
         docs.select("doc_id", "text"), toks=tokens("text")
     )
-    n = F.size("toks")
-    bgs = F.zip_with(
-        F.slice(F.col("toks"), 1, n - 1),
-        F.slice(F.col("toks"), 2, n - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
     tb = generate_barrier(
-        t.select("doc_id", "toks"), sbg=F.sort_array(bgs)
+        t.select("doc_id", "toks"), sbg=F.sort_array(ngrams("toks", 2))
     ).where(F.size("sbg") > 0)
     nbg = F.size("sbg")
-    # fold over positions: cur = current run length, best/bb = longest
-    # run so far and its bigram (strict > keeps the EARLIEST max, i.e.
-    # the lexicographically smallest bigram on count ties)
-    best = F.aggregate(
-        F.sequence(F.lit(0), nbg - 1),
-        F.struct(
-            F.lit(0).alias("cur"),
-            F.lit(0).alias("best"),
-            F.lit(None).cast("string").alias("bb"),
-        ),
-        lambda acc, i: F.struct(
-            F.when(
-                (i > 0) & (F.get(F.col("sbg"), i) == F.get(F.col("sbg"), i - 1)),
-                acc["cur"] + 1,
-            )
-            .otherwise(F.lit(1))
-            .alias("cur"),
-            F.greatest(
-                acc["best"],
-                F.when(
-                    (i > 0)
-                    & (F.get(F.col("sbg"), i) == F.get(F.col("sbg"), i - 1)),
-                    acc["cur"] + 1,
-                ).otherwise(F.lit(1)),
-            ).alias("best"),
-            F.when(
-                F.when(
-                    (i > 0)
-                    & (F.get(F.col("sbg"), i) == F.get(F.col("sbg"), i - 1)),
-                    acc["cur"] + 1,
-                ).otherwise(F.lit(1))
-                > acc["best"],
-                F.get(F.col("sbg"), i),
-            )
-            .otherwise(acc["bb"])
-            .alias("bb"),
-        ),
-    )
     ttr = F.col("n_unique").cast("double") / F.col("n_tokens").cast("double")
-    top_frac = F.col("_b.best").cast("double") / F.col("n_bigrams").cast("double")
+    top_frac = F.col("_b.run").cast("double") / F.col("n_bigrams").cast("double")
     return tb.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_tokens"),
         F.size(F.array_distinct("toks")).cast("long").alias("n_unique"),
-        best.alias("_b"),
+        top_run("sbg").alias("_b"),
         nbg.cast("long").alias("n_bigrams"),
     ).select(
         "doc_id",
         "n_tokens",
         "n_unique",
         ttr.alias("type_token_ratio"),
-        F.col("_b.bb").alias("top_bigram"),
-        F.col("_b.best").cast("long").alias("top_bigram_count"),
+        F.col("_b.value").alias("top_bigram"),
+        F.col("_b.run").cast("long").alias("top_bigram_count"),
         top_frac.alias("top_bigram_frac"),
         ((ttr >= 0.3) & (top_frac <= 0.18)).alias("passes_quality"),
     )

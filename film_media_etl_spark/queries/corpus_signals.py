@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import shingles, tokens
+from ..functions.text import ngrams, shingles, tokens
 from ..operators.bloom import bloom_build, bloom_contains
 from ..sources import ensure_parallelism, load_table
 from .registry import register
@@ -190,10 +190,10 @@ def ext_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source n-gram diversity report (dataset-card numbers): doc
     count, exact total/distinct token and trigram counts, type-token
-    ratio, duplicate-trigram fraction. Trigrams come from a nested
-    zip_with over three shifted slices — JVM higher-order functions,
-    zero Python, no join to form the grams (see ngram_diversity for
-    the one-text-scan fusion and shuffle economics). This is
+    ratio, duplicate-trigram fraction. Trigrams come from
+    functions/text.ngrams — JVM higher-order functions, zero Python, no
+    join to form the grams (see ngram_diversity for the one-text-scan
+    fusion and shuffle economics). This is
     deliberately the EXACT tier — the HLL sketch family
     (ext_hll_distinct, streaming/sketches.py) answers the same
     question at 100 TB with KB-sized state, and this report is its
@@ -204,33 +204,22 @@ def ext_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ngram_diversity(docs: DataFrame) -> DataFrame:
     """Per-source diversity report over any (doc_id, source, text)
-    frame; short documents (< 3 tokens) contribute zero trigrams via
-    the greatest(n-2, 0) slice-length guard instead of erroring. A
+    frame; short documents (< 3 tokens) contribute zero trigrams
+    (ngrams yields [] below n tokens) instead of erroring. A
     source with zero grams of a kind reports -1.0 for the derived
     fraction (the output-null contract: the zero count is the
     indicator, the sentinel keeps the double column NULL-free).
 
     Scan economics (the text column dominates corpus bytes): tokens and
     trigrams are fused into ONE tagged gram array per document and
-    exploded once, so the corpus text is read exactly once — the naive
-    two-branch form read it twice (measured in the plan census before
-    the fusion). The doc counter reads only the pruned `source` column.
+    exploded once, so the corpus text is read exactly once — a
+    two-branch form (tokens and trigrams exploded separately) scans it
+    twice. The doc counter reads only the pruned `source` column.
     Distinct counting keys the shuffle on (source, kind, gram) with
     Spark's partial-distinct map side, so the exchange carries distinct
     grams, never gram occurrences."""
     t = docs.select(
         "doc_id", "source", tokens("text").alias("toks")
-    )
-    n = F.size("toks")
-    tg_len = F.greatest(n - 2, F.lit(0))
-    trigram = F.zip_with(
-        F.slice(F.col("toks"), 1, tg_len),
-        F.zip_with(
-            F.slice(F.col("toks"), 2, tg_len),
-            F.slice(F.col("toks"), 3, tg_len),
-            lambda b, c: F.concat(b, F.lit(" "), c),
-        ),
-        lambda a, bc: F.concat(a, F.lit(" "), bc),
     )
     tagged = F.concat(
         F.transform(
@@ -238,7 +227,7 @@ def ngram_diversity(docs: DataFrame) -> DataFrame:
             lambda x: F.struct(F.lit(1).alias("kind"), x.alias("gram")),
         ),
         F.transform(
-            trigram,
+            ngrams("toks", 3),
             lambda x: F.struct(F.lit(3).alias("kind"), x.alias("gram")),
         ),
     )

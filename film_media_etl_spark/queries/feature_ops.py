@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import token_set, tokens
+from ..functions.text import ngrams, token_set, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -417,10 +417,7 @@ def ext_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.size("toks") >= _WIN_K)
     # barrier 2: the gram-hash array — the sliding-min gets below read
     # it per element, so it must be an attribute, not an expression
-    hs = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - (_WIN_K - 1)),
-        lambda i: F.md5(F.array_join(F.slice(F.col("toks"), i, _WIN_K), " ")),
-    )
+    hs = F.transform(ngrams("toks", _WIN_K), F.md5)
     h = generate_barrier(t.select("doc_id", "toks"), hs=hs).select("doc_id", "hs")
     # fp[j] = min(hs[j-W+1 .. j]) for 0-indexed window ends j >= W-1 —
     # identical to the former Window MIN over (PARTITION BY doc ORDER BY

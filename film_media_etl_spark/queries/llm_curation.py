@@ -141,9 +141,8 @@ def ext_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     The eval shingle set is benchmark-sized: it collapses to ONE array
     riding a broadcast, and every training document runs a map-side
     arrays_overlap probe against it — the training side is never
-    exploded and never shuffled (an explode+join spelling was measured
-    7x slower at sf0.1: it shuffles corpus x shingles rows to dedupe
-    doc ids). Cost is one linear scan of the corpus regardless of size;
+    exploded and never shuffled (an explode+join spelling shuffles
+    corpus x shingles rows to dedupe doc ids). Cost is one linear scan of the corpus regardless of size;
     only the final per-source aggregate exchanges."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     sh = docs.select(

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -106,21 +106,6 @@ def _dup_seg_fracs(segs: Column) -> tuple[Column, Column]:
     chars = _seg_chars(segs)
     chars_d = _seg_chars(F.array_distinct(segs))
     return _frac(n - nd, n), _frac(chars - chars_d, chars)
-
-
-def _gram_structs(toks: Column, n: int) -> Column:
-    """array<struct<g,p>> of the document's n-grams with positions;
-    empty (not a descending sequence) when the doc is shorter than n."""
-    cnt = F.size(toks) - (n - 1)
-    return F.when(
-        cnt >= 1,
-        F.transform(
-            F.sequence(F.lit(1), cnt),
-            lambda i: F.struct(
-                F.array_join(F.slice(toks, i, n), " ").alias("g"), i.alias("p")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<g:string,p:int>>"))
 
 
 def top_ngram_char_frac(gs: Column, total_chars: Column) -> Column:
@@ -233,20 +218,22 @@ def dup_ngram_char_frac(srt: Column, toks: Column, total_chars: Column, n: int) 
 def _rep_arrays(tk: Column) -> Column:
     """The 9 sorted gram arrays as one struct — the value the Generate
     barrier materializes ONCE per row (g2..g4: plain sorted gram
-    strings for the top-gram folds; s5..s10: sorted struct<g,p> for the
-    dup-coverage folds) — plus the normalized total character count,
-    which all nine gram fractions divide by (round-11: as a plain
-    expression it was re-evaluated — one O(chars) array_join per
-    signal — because projection-defined columns inline into each
-    consumer)."""
+    strings for the top-gram folds; s5..s10: sorted struct<g,p>, p the
+    gram's 1-based start token, for the dup-coverage folds) — plus the
+    normalized total character count, which all nine gram fractions
+    divide by (round-11: as a plain expression it was re-evaluated —
+    one O(chars) array_join per signal — because projection-defined
+    columns inline into each consumer)."""
     return F.struct(
+        *[F.array_sort(ngrams(tk, n)).alias(f"g{n}") for n in (2, 3, 4)],
         *[
             F.array_sort(
-                F.transform(_gram_structs(tk, n), lambda x: x["g"])
-            ).alias(f"g{n}")
-            for n in (2, 3, 4)
+                F.transform(
+                    ngrams(tk, n), lambda g, i: F.struct(g.alias("g"), (i + 1).alias("p"))
+                )
+            ).alias(f"s{n}")
+            for n in (5, 6, 7, 8, 9, 10)
         ],
-        *[F.array_sort(_gram_structs(tk, n)).alias(f"s{n}") for n in (5, 6, 7, 8, 9, 10)],
         F.length(F.array_join(tk, " ")).alias("total"),
     )
 

@@ -462,9 +462,9 @@ def bm25_scores(docs: DataFrame) -> DataFrame:
     the old per-doc partial aggregate accumulated (filter preserves
     struct order and a doc's exploded rows never crossed a partition),
     and x + 0.0 is exact for the strictly-positive scores, so the
-    rounded doubles are bit-identical. Measured same-window solo A/B:
-    ext_bm25_search min 1.78 -> 1.05s, ext_rrf_fusion min 1.95 ->
-    1.18s at sf0.1."""
+    rounded doubles are bit-identical. Same-window solo A/B at sf0.1
+    (OPTIMIZATION_r11.md §6): ext_bm25_search min 1.78 -> 1.05s,
+    ext_rrf_fusion min 1.95 -> 1.18s."""
     per_doc = _bm25_per_doc(docs).localCheckpoint(eager=False)
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -44,11 +44,11 @@ from .registry import register
 # Coarse-quantizer sizing: K = max(8, N // _SEM_BLOCK) seed centroids
 # (vec_id < K) stand in for a trained IVF codebook — K GROWS WITH THE
 # CORPUS so per-cluster block size (and with it the pairwise stage's
-# quadratic bound) stays ~constant. A fixed K=8 measured 14x wall at 4x
-# corpus (blocks 4x -> pairs 16x — the exact failure SemDeDup's
-# corpus-scaled clustering exists to prevent); adaptive K bounds the
-# EVALUATED-candidate volume at ~sum(block^2) ~ N * block. NOTE the
-# VERIFIED-pair output is a property of the data, not the plan: a 4x
+# quadratic bound) stays ~constant. A fixed K=8 grows every block with
+# the corpus (blocks 4x -> pairs 16x at 4x corpus — the exact failure
+# SemDeDup's corpus-scaled clustering exists to prevent); adaptive K
+# bounds the EVALUATED-candidate volume at ~sum(block^2) ~ N * block.
+# NOTE the VERIFIED-pair output is a property of the data, not the plan: a 4x
 # perturbed-copy corpus carries ~16x true pairs (every cross-copy pair
 # of a true pair also qualifies), and uniform-random embeddings make a
 # fixed absolute threshold intrinsically dense — on such corpora wall
@@ -75,8 +75,8 @@ def _assign_clusters(emb: DataFrame, k: int, *, inline_max: int = _K_INLINE_MAX)
 
     Small K (<= inline_max): the codebook is collected and INLINED as
     literals, so assignment is a pure map expression — zero shuffles,
-    no crossJoin, no window (the crossJoin+window formulation was
-    measured triplicating a scan+window subtree because Spark does not
+    no crossJoin, no window (the crossJoin+window formulation repeats
+    its scan+window subtree in every consumer because Spark does not
     CSE across DataFrame reuse). Large K: literals would blow the
     codegen method limit, so the codebook rides an F.broadcast join and
     the argmin becomes a min(struct(dist2, cid)) AGGREGATE (not a
@@ -208,9 +208,9 @@ def ext_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # off-diagonal tile (i,j) then joins exactly subgroup-i x subgroup-j
     # — every cross-subgroup pair lands in exactly ONE tile with no
     # ordering guard, and candidate volume equals the untiled a<b count
-    # (a both-sides-to-all-tiles spelling was measured 2.5x MORE
-    # candidate cosine folds — the guard discards them only after the
-    # join emits them). Diagonal tiles keep the vec_id< constraint.
+    # (a both-sides-to-all-tiles spelling evaluates MORE candidate
+    # cosine folds — the guard discards them only after the join emits
+    # them). Diagonal tiles keep the vec_id< constraint.
     # Result: K*S(S+1)/2-way parallelism, <=S-fold replication of tiny
     # (id, vec) rows, identical pair set.
     grp = F.pmod(F.xxhash64("vec_id"), F.lit(_TILES)).cast("int")
@@ -546,7 +546,10 @@ def curation_verdict(
     CURATION_BLOCKLIST; ``blocklist_max_expr`` is the expression-path
     phrase cap (default queries/blocklist.BLOCKLIST_EXPR_MAX_PHRASES —
     pass 0 to force the broadcast semi-join path, as the oracle-checked
-    ext_curation_gate_joinpath and the plan tests do). See
+    ext_curation_gate_joinpath and the plan tests do). The repetition
+    tier's top-bigram count is functions/text.top_run over the sorted
+    ngrams(toks, 2), the helpers the stream gate
+    (streaming/ingest_dedup.stream_curation_gate) calls too. See
     ext_curation_pipeline for the full gate inventory and the shuffle
     accounting."""
     from ..functions import text as TX
@@ -585,46 +588,18 @@ def curation_verdict(
     # with_repetition_verdict adds its own barrier for the 9 gram arrays
     # and leaves one boolean attribute (rep_ok) for the reason chain.
     t = with_repetition_verdict(t0)
-    # Top-bigram stats MAP-SIDE (optimization round 10, guide §2.4): the
-    # former spelling exploded every bigram, aggregated by (doc_id, bg)
-    # and ran two doc_id windows (rank + total) — two corpus exchanges
-    # plus a sort, and the branch re-derived the t0 subtree (scan,
-    # blocklist, split, lang/quality barrier) a second time because a
-    # Generate is not a reuse boundary. Both quantities are per-document
-    # facts: n_bigrams is the bigram count and topc the maximum
-    # multiplicity, i.e. the longest equal-run in the SORTED bigram
-    # array — one sort_array + one linear fold per row (the
-    # repetition_signals zip-with-tail idiom; the sorted array sits
-    # behind a Generate barrier so no lambda re-evaluates it). NULL
-    # semantics match the old left join exactly: docs with no bigrams
-    # (short or NULL text) carry NULL topc/n_bigrams.
+    # Top-bigram stats map-side: n_bigrams is the bigram count and topc
+    # the maximum multiplicity, TX.top_run's run over the SORTED bigram
+    # array (the same helper the stream gate and ext_repetition_quality
+    # call); the sorted array sits behind a Generate barrier so the fold
+    # never re-evaluates it. Docs with no bigrams (short or NULL text)
+    # carry NULL topc/n_bigrams, as the oracle's left join does.
     n = F.size("toks")
-    bgs = F.zip_with(
-        F.slice(F.col("toks"), 1, n - 1),
-        F.slice(F.col("toks"), 2, n - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    tb = TX.generate_barrier(t, sbg=F.sort_array(bgs))
+    tb = TX.generate_barrier(t, sbg=F.sort_array(TX.ngrams("toks", 2)))
     nbg = F.size("sbg")
-    eq = F.zip_with(
-        F.col("sbg"),
-        F.slice(F.col("sbg"), 2, F.greatest(nbg - 1, F.lit(0))),
-        lambda a, b: a.eqNullSafe(b),
-    )
-    run_max = F.aggregate(
-        eq,
-        F.struct(F.lit(1).alias("cur"), F.lit(1).alias("mx")),
-        lambda acc, e: F.struct(
-            F.when(e, acc["cur"] + 1).otherwise(F.lit(1)).alias("cur"),
-            F.greatest(
-                acc["mx"], F.when(e, acc["cur"] + 1).otherwise(F.lit(1))
-            ).alias("mx"),
-        ),
-        lambda acc: acc["mx"],
-    )
     t = tb.withColumns(
         {
-            "topc": F.when(nbg > 0, run_max).cast("long"),
+            "topc": F.when(nbg > 0, TX.top_run("sbg")["run"]).cast("long"),
             "n_bigrams": F.when(nbg > 0, nbg).cast("long"),
         }
     )

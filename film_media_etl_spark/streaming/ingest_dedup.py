@@ -184,11 +184,12 @@ def stream_curation_gate(
     Generate barrier — predicted_lang + quality_score materialize once).
     The repetition gate needs no per-doc aggregation on a stream: the
     type-token ratio and the top-bigram share are per-ROW higher-order
-    functions over the token array (the top-bigram count is the longest
-    equal run in the SORTED bigram array — an O(n log n) fold, stateless
-    on the stream; the batch query's explode+groupBy computes the
-    identical number). Only the DUPLICATE gate is stateful: one boolean per
-    content fingerprint in applyInPandasWithState, first-writer-wins —
+    functions over the token array (the top-bigram count is
+    functions/text.top_run over the sorted ngrams(toks, 2), an
+    O(n log n) fold, stateless on the stream; the batch
+    curation_verdict calls the same two helpers). Only the DUPLICATE
+    gate is stateful: one boolean per content fingerprint in
+    applyInPandasWithState, first-writer-wins —
     any document with the text claims the fingerprint (matching the
     batch dup CTE, which takes MIN(doc_id) over ALL docs with the text,
     gated or not). Within a batch, rows replay in doc_id order, so a
@@ -213,11 +214,6 @@ def stream_curation_gate(
     )
     toks = tokens("text")
     n = F.size("toks")
-    bgs = F.zip_with(
-        F.slice(F.col("toks"), 1, n - 1),
-        F.slice(F.col("toks"), 2, n - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
     # with_blocklist_reason and with_repetition_verdict are stateless
     # map-side work on a stream (Project + Generate barriers), so they
     # compose onto it like any other scalar gate — the same shared
@@ -229,29 +225,11 @@ def stream_curation_gate(
                 lex,
                 max_expr_phrases=cap,
             )
-        ).withColumn("bgs", bgs)
+        ).withColumn("bgs", TX.ngrams("toks", 2))
     )
-    # top-bigram count == longest equal run in the SORTED bigram array —
-    # O(n log n) per doc vs the O(distinct x n) distinct/filter spelling
-    # (this runs per-row on the ingest hot path). "" is a safe run
-    # sentinel: every bigram contains the joining space.
-    top_count = F.aggregate(
-        F.array_sort("bgs"),
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
+    # top-bigram count: the longest equal run in the SORTED bigram array,
+    # O(n log n) per doc on the ingest hot path
+    top_count = TX.top_run(F.array_sort("bgs"))["run"]
     top_share = top_count.cast("double") / F.size("bgs").cast("double")
     ttr_ok = (
         F.size(F.array_distinct("toks")).cast("double") / n.cast("double")

@@ -19,8 +19,13 @@ from conftest import PARITY_SF_DIR
 from film_media_etl_spark.functions.dates import smart_date_key, week_of_year_noniso
 from film_media_etl_spark.functions.text import (
     FINGERPRINT_MOD,
+    adjacent_pairs,
     fingerprint,
+    ngrams,
+    shingles,
     token_count,
+    tokens,
+    top_run,
 )
 
 SEED = 42
@@ -78,6 +83,81 @@ def test_token_count_matches_model(spark):
     got = {r["i"]: r["n"] for r in df.select("i", token_count(F.col("t")).alias("n")).collect()}
     for i, t in enumerate(texts):
         assert got[i] == len(t.lower().split(" ")), repr(t)
+
+
+def test_ngram_helpers_match_python_model(spark):
+    """functions/text.ngrams (and its position form in
+    repetition_signals._rep_arrays), shingles, adjacent_pairs and top_run
+    against plain-Python models: NULL, "", one token, a double space,
+    repeated grams and seeded random word sequences."""
+    from film_media_etl_spark.queries.repetition_signals import _rep_arrays
+
+    rng = random.Random(SEED)
+    texts = [None, "", "one", "a  b", "a b a b a b", "x y x y z x y", "B a b A b a c"]
+    texts += [" ".join(rng.choice("abc") for _ in range(rng.randint(1, 14))) for _ in range(200)]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string").select(
+        "i", tokens("text").alias("toks")
+    )
+    rows = {
+        r["i"]: r
+        for r in df.select(
+            "i",
+            *[ngrams("toks", n).alias(f"n{n}") for n in (2, 3, 5)],
+            *[shingles(F.col("toks"), n).alias(f"sh{n}") for n in (2, 3)],
+            _rep_arrays(F.col("toks")).alias("ra"),
+            top_run(F.sort_array(ngrams("toks", 2))).alias("tr"),
+        ).collect()
+    }
+
+    def grams(toks, n):
+        return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+    def run_model(srt):
+        best, value, i = 0, None, 0
+        while i < len(srt):
+            j = i
+            while j < len(srt) and srt[j] == srt[i]:
+                j += 1
+            if j - i > best:
+                best, value = j - i, srt[i]
+            i = j
+        return best, value
+
+    for i, text in enumerate(texts):
+        toks = [] if text is None else text.lower().split(" ")
+        r = rows[i]
+        for n in (2, 3, 5):
+            assert r[f"n{n}"] == grams(toks, n), (text, n)
+        for n in (2, 3):
+            assert r[f"sh{n}"] == list(dict.fromkeys(grams(toks, n))), (text, n)
+        for n in (2, 3, 4):
+            assert r["ra"][f"g{n}"] == sorted(grams(toks, n)), (text, n)
+        for n in (5, 6, 7, 8, 9, 10):
+            pos = sorted((g, p + 1) for p, g in enumerate(grams(toks, n)))
+            assert [tuple(x) for x in r["ra"][f"s{n}"]] == pos, (text, n)
+        assert tuple(r["tr"]) == run_model(sorted(grams(toks, 2))), text
+
+    arrs = [None, [], [7], [1, 2], [3, 1, 4, 1, 5, 9, 2, 6]]
+    got = [
+        r["p"]
+        for r in spark.createDataFrame([(i, a) for i, a in enumerate(arrs)], "i int, a array<int>")
+        .orderBy("i")
+        .select(adjacent_pairs("a", lambda x, y: x * 10 + y).alias("p"))
+        .collect()
+    ]
+    assert got == [None] + [[x * 10 + y for x, y in zip(a, a[1:])] for a in arrs[1:]]
+
+    # tie order: equal-length runs keep the earliest (smallest) element
+    runs = [[], ["b"], ["a", "b"], ["a", "a", "b", "b"], ["a", "b", "b", "c", "c"], [" ", " ", "x"]]
+    got = [
+        tuple(r["tr"])
+        for r in spark.createDataFrame([(i, a) for i, a in enumerate(runs)], "i int, a array<string>")
+        .orderBy("i")
+        .select(top_run("a").alias("tr"))
+        .collect()
+    ]
+    assert got == [(0, None), (1, "b"), (1, "a"), (2, "a"), (2, "b"), (2, " ")]
+    assert got == [run_model(a) for a in runs]
 
 
 def test_global_index_matches_row_number_model(spark):
