@@ -362,8 +362,9 @@ def ext_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Incremental sales_summary maintenance (reference README:22,52 claims the
-# pre-aggregate; etl/star.py materializes it batch-only — this query proves
-# the MERGE-maintained incremental path converges to the same table)
+# pre-aggregate; etl/star.build_star writes it once per build from the
+# whole fact — this query proves the MERGE-maintained incremental path
+# converges to the same table)
 # ---------------------------------------------------------------------------
 
 

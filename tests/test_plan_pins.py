@@ -89,15 +89,51 @@ def test_load_table_rereads_schema_of_rewritten_table(spark, tmp_path):
 
 
 def test_star_rebuild_job_ceiling(spark):
-    """A build_star rebuild runs at most 40 Spark jobs: every source
-    schema comes from the session's memo, and one prepare_global_index
-    call collects all four surrogate-key stats in two actions (it was
-    one inference job per table read and two actions per key: 77
-    jobs)."""
+    """A build_star rebuild runs at most 40 Spark jobs (38 at sf0.001 and
+    sf0.01): every source schema comes from the session's memo, and one
+    prepare_global_index call collects all four surrogate-key stats in
+    two actions (it was one inference job per table read and two actions
+    per key: 77 jobs)."""
     star._STAR_CACHE.clear()
     star.build_star(spark, PARITY_SF_DIR)
     star._STAR_CACHE.clear()
     assert _jobs_run(spark, lambda: star.build_star(spark, PARITY_SF_DIR)) <= 40
+
+
+_SUMMARY_REPORTS = [
+    n for n in sorted(all_queries())
+    if n.startswith("report_r") and int(n[8:10]) in (1, 2, 3, 4, 7, 8, 9, 11, 12, 13, 14)
+]
+
+
+@pytest.mark.parametrize("name", _SUMMARY_REPORTS)
+def test_summary_reports_scan_only_the_summary(spark, name):
+    """The additive reports read the sales_summary table build_star
+    wrote (one file; 2,379 rows at sf0.01), never the fact: no report
+    call re-aggregates the fact_sales rows, not even inside r02's and
+    r11's scalar subqueries."""
+    summary = star.build_star(spark, PARITY_SF_DIR)["sales_summary"]
+    assert len(summary.inputFiles()) == 1
+    df = _q(name, spark)
+    df.collect()  # finalize AQE
+    scans = re.findall(r"FileScan parquet [^\n]*", physical_plan(df))
+    assert any("/sales_summary]" in s for s in scans), scans
+    assert not any("/fact_sales]" in s for s in scans), scans
+
+
+def test_warehouse_report_job_ceiling(spark):
+    """Warm, the flagship and the 15 reports start at most 45 Spark jobs
+    in all through a noop save (56 when sales_summary was a lazy
+    aggregate over the fact that every report call re-ran)."""
+    ops = ["flagship_revenue_by_year", *sorted(n for n in all_queries() if n.startswith("report_r"))]
+    assert len(ops) == 16
+
+    def run_all():
+        for name in ops:
+            _q(name, spark).write.mode("overwrite").format("noop").save()
+
+    run_all()
+    assert _jobs_run(spark, run_all) <= 45
 
 
 def test_token_budget_guard_reuses_the_documents_exchange(spark):

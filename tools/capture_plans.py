@@ -10,10 +10,13 @@ match what the bench times. These files are the optimization round's
 before/after evidence — regenerate the *_after.txt set after the last
 code change of the round.
 
-Expression ids (``#123``), lambda variable suffixes (``lambda x_17``)
-and ``plan_id=N`` are normalized before writing: all three count up per
-session, so without this every line of a before/after pair differs and
-the diff hides the real change.
+Expression ids (``#123``), lambda variable suffixes (``lambda x_17``),
+``plan_id=N`` and RDD ids (``MapPartitionsRDD[42]``) count up per
+session, and the engine's temp directories carry the process id
+(``fmes_warehouse_<pid>``, ``fmes_buckets_<pid>``) or a random suffix
+(``dedup_index_<random>``, ``ivf_index_<random>``). All of them are
+replaced by placeholders before writing, so a before/after pair differs
+only where the plan does.
 """
 
 from __future__ import annotations
@@ -34,8 +37,19 @@ def formatted_plan(df) -> str:
     )
 
 
+_PER_SESSION_IDS = (
+    (r"#\d+", "#N"),
+    (r"(lambda \w+?)_\d+\b", r"\1_N"),
+    (r"plan_id=\d+", "plan_id=N"),
+    (r"(\w+RDD)\[\d+\]", r"\1[N]"),
+    (r"\b(fmes_warehouse|fmes_buckets)_\d+\b", r"\1_<pid>"),
+    # tempfile.mkdtemp appends 8 characters from [a-z0-9_]
+    (r"\b(dedup_index|ivf_index)_[a-z0-9_]{8}(?![a-z0-9_])", r"\1_<tmp>"),
+)
+
+
 def normalize_plan(plan: str) -> str:
-    for pat, rep in ((r"#\d+", "#N"), (r"(lambda \w+?)_\d+\b", r"\1_N"), (r"plan_id=\d+", "plan_id=N")):
+    for pat, rep in _PER_SESSION_IDS:
         plan = re.sub(pat, rep, plan)
     return plan
 
