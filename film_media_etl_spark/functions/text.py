@@ -56,7 +56,7 @@ def token_hashes(text: Column | str) -> Column:
     return F.transform(token_set(text), lambda t: F.xxhash64(t))
 
 
-def ngrams(toks: Column | str, n: int) -> Column:
+def ngrams(toks: Column | str, n: int | Column) -> Column:
     """Ordered word n-grams of a token array, as space-joined strings,
     repeats kept; the only Spark spelling of the word n-gram
     (tests/test_source_rules.py). Arrays shorter than n, and NULL,
@@ -64,9 +64,11 @@ def ngrams(toks: Column | str, n: int) -> Column:
     would generate a DESCENDING sequence, not an empty one. ``toks``
     should be an attribute (a select alias or Generate output), not an
     inline split: the lambda re-evaluates an outer expression once per
-    gram. ``n`` is a Python int, so the element lambda stays unary
-    (F.transform dispatches on lambda arity: a two-parameter lambda is
-    called as (element, index))."""
+    gram. ``n`` is a Python int or an int Column — a lambda variable
+    lets one expression build the grams for several n (see
+    queries/repetition_signals._rep_arrays). The element lambda stays
+    unary either way (F.transform dispatches on lambda arity: a
+    two-parameter lambda is called as (element, index))."""
     grams = F.transform(
         F.sequence(F.lit(0), F.size(toks) - F.lit(n)),
         # slice+array_join, NOT n F.get()+concat_ws: one bounds-checked

@@ -45,7 +45,7 @@ rows and broadcasts; the substring explode is bounded by word length
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -104,15 +104,22 @@ def build_unigram_vocab(
         .limit(VOCAB_SIZE)
     )
     chars = subs.where(F.length("piece") == 1)
-    vocab = top.unionByName(chars)
-    tot = vocab.agg(F.sum("c").alias("t"))
-    return vocab.crossJoin(F.broadcast(tot)).select(
+    return top.unionByName(chars).select(
         "piece",
         F.col("c").cast("long").alias("c"),
-        F.round(F.log10(F.col("c").cast("double") / F.col("t")), 6)
-        .cast(_LOGP_DEC)
-        .alias("logp"),
+        _log10_share("c").alias("logp"),
     )
+
+
+def _log10_share(c: str) -> Column:
+    """log10(c / sum(c)) over the whole frame, rounded to 6 decimals as
+    DECIMAL — the piece log-prob both the seed vocab and the EM round
+    normalize with. The sum is a window over the frame's rows (piece
+    tables: at most VOCAB_SIZE plus the charset), so the frame's plan,
+    and the corpus scans beneath it, are built and run once. NULL c
+    stays NULL and is skipped by the sum."""
+    t = F.sum(c).over(Window.partitionBy())
+    return F.round(F.log10(F.col(c).cast("double") / t), 6).cast(_LOGP_DEC)
 
 
 def _word_matches(words: DataFrame, pieces: DataFrame) -> DataFrame:
@@ -385,22 +392,14 @@ def unigram_em_round(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
         .groupBy("piece")
         .agg(F.sum("n").cast("long").alias("c_em"))
     )
-    tot = used.agg(F.sum("c_em").alias("t"))
-    return (
-        pieces.join(used, "piece", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "piece",
-            F.col("c").alias("c_seed"),
-            F.coalesce("c_em", F.lit(0).cast("long")).alias("c_em"),
-            F.when(
-                F.col("c_em").isNotNull(),
-                F.round(
-                    F.log10(F.col("c_em").cast("double") / F.col("t")), 6
-                ).cast(_LOGP_DEC),
-            )
-            .otherwise(F.lit("0").cast(_LOGP_DEC))
-            .alias("logp_em"),
-            F.col("c_em").isNull().alias("pruned"),
-        )
+    # every used piece is a seed piece (segments are built from piece
+    # matches), so the left join keeps all of the used mass
+    return pieces.join(used, "piece", "left").select(
+        "piece",
+        F.col("c").alias("c_seed"),
+        F.coalesce("c_em", F.lit(0).cast("long")).alias("c_em"),
+        F.when(F.col("c_em").isNotNull(), _log10_share("c_em"))
+        .otherwise(F.lit("0").cast(_LOGP_DEC))
+        .alias("logp_em"),
+        F.col("c_em").isNull().alias("pruned"),
     )

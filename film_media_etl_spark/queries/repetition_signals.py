@@ -41,6 +41,12 @@ ONCE per row behind a Generate barrier (the lang_quality_barrier
 pattern), and duplicate detection is a single fold over a zip of the
 sorted array with its own tail — no lambda ever indexes an outer
 array.
+
+Each fold is spelled once: the gram lengths are data (TOP_NS, DUP_NS),
+the barrier holds one array of sorted gram arrays per fold family, and
+the top-gram and dup-coverage folds are each one lambda mapped over
+that array, n zipped in beside it. The verdict reads each result array
+once, as a whole, so no fold runs twice for it.
 """
 
 from __future__ import annotations
@@ -48,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams, tokens
+from ..functions.text import generate_barrier, ngrams, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -85,6 +91,24 @@ GOPHER_REP_THRESHOLDS: dict[str, float] = {
     "dup_9gram_char_frac": 0.11,
     "dup_10gram_char_frac": 0.10,
 }
+
+
+# The gram lengths of the battery: top-gram fractions for TOP_NS,
+# duplicated-gram coverage for DUP_NS. Each fold is spelled once and
+# mapped over the arrays for its n values (_rep_arrays, _signals).
+TOP_NS = (2, 3, 4)
+DUP_NS = (5, 6, 7, 8, 9, 10)
+# The signal names in report order: the four segment signals, then the
+# gram signals, each family an array in _signals.
+_SEG_NAMES = ("dup_line_frac", "dup_line_char_frac", "dup_para_frac", "dup_para_char_frac")
+_GRAM_NAMES = {
+    "top": tuple(f"top_{n}gram_char_frac" for n in TOP_NS),
+    "dup": tuple(f"dup_{n}gram_char_frac" for n in DUP_NS),
+}
+
+
+def _ns(ns: tuple[int, ...]) -> Column:
+    return F.array(*[F.lit(n) for n in ns])
 
 
 def _seg_chars(segs: Column) -> Column:
@@ -133,7 +157,7 @@ def top_ngram_char_frac(gs: Column, total_chars: Column) -> Column:
     return _frac(best, total_chars)
 
 
-def dup_ngram_char_frac(srt: Column, toks: Column, total_chars: Column, n: int) -> Column:
+def dup_ngram_char_frac(srt: Column, toks: Column, total_chars: Column, n: Column) -> Column:
     """Union character coverage of duplicated n-grams / normalized text
     length. ``srt`` is the PRE-SORTED struct<g,p> gram array (equal
     grams adjacent). Duplicate positions fall out of ONE fold over the
@@ -142,9 +166,10 @@ def dup_ngram_char_frac(srt: Column, toks: Column, total_chars: Column, n: int) 
     gram rides the accumulator, the next rides the zip, so no lambda
     ever indexes an outer array (which would re-evaluate it per
     element). The collected positions then fold into merged
-    [p, p+n-1] intervals, accumulating covered token characters run by
-    run (O(covered), each token counted once) plus in-run separator
-    spaces."""
+    [p, p+n-1] intervals (``n``, the gram length, is an int Column:
+    _signals zips it in beside each gram array), accumulating
+    covered token characters run by run (O(covered), each token counted
+    once) plus in-run separator spaces."""
     m = F.size(srt)
     tail = F.concat(
         F.slice(srt, 2, F.greatest(m - 1, F.lit(0))),
@@ -216,63 +241,76 @@ def dup_ngram_char_frac(srt: Column, toks: Column, total_chars: Column, n: int) 
 
 
 def _rep_arrays(tk: Column) -> Column:
-    """The 9 sorted gram arrays as one struct — the value the Generate
-    barrier materializes ONCE per row (g2..g4: plain sorted gram
-    strings for the top-gram folds; s5..s10: sorted struct<g,p>, p the
-    gram's 1-based start token, for the dup-coverage folds) — plus the
-    normalized total character count, which all nine gram fractions
-    divide by (round-11: as a plain expression it was re-evaluated —
-    one O(chars) array_join per signal — because projection-defined
-    columns inline into each consumer)."""
+    """The sorted gram arrays as one struct — the value the Generate
+    barrier materializes ONCE per row — plus the normalized total
+    character count, which every gram fraction divides by (as a plain
+    expression it was re-evaluated, one O(chars) array_join per signal,
+    because projection-defined columns inline into each consumer).
+    ``g`` holds one plain sorted gram array per n in TOP_NS, for the
+    top-gram fold; ``s`` one sorted struct<g,p> array per n in DUP_NS
+    (p the gram's 1-based start token), for the dup-coverage fold. Each
+    family is one lambda over its n values, so n is data, not a Python
+    loop."""
     return F.struct(
-        *[F.array_sort(ngrams(tk, n)).alias(f"g{n}") for n in (2, 3, 4)],
-        *[
-            F.array_sort(
+        F.transform(_ns(TOP_NS), lambda n: F.array_sort(ngrams(tk, n))).alias("g"),
+        F.transform(
+            _ns(DUP_NS),
+            lambda n: F.array_sort(
                 F.transform(
-                    ngrams(tk, n), lambda g, i: F.struct(g.alias("g"), (i + 1).alias("p"))
+                    ngrams(tk, n),
+                    lambda g, i: F.struct(g.alias("g"), (i + 1).alias("p")),
                 )
-            ).alias(f"s{n}")
-            for n in (5, 6, 7, 8, 9, 10)
-        ],
+            ),
+        ).alias("s"),
         F.length(F.array_join(tk, " ")).alias("total"),
     )
 
 
-def _signal_cols(toks: Column, lines: Column, paras: Column, ga: Column) -> dict[str, Column]:
-    """All 13 signal expressions over the barrier-materialized columns
-    (``ga`` is the _rep_arrays struct attribute produced by the
-    caller's Generate)."""
+def _signals(toks: Column, lines: Column, paras: Column, ga: Column) -> dict[str, Column]:
+    """The 13 signals over the barrier-materialized columns (``ga`` is
+    the _rep_arrays struct attribute produced by the caller's Generate):
+    the four segment fractions by name, then the nine gram fractions as
+    two arrays — ``top`` (n in TOP_NS) and ``dup`` (n in DUP_NS), each
+    one fold mapped over its gram arrays with n zipped in as data.
+    Reading an array element by element (_named) re-runs its whole fold
+    per read unless a barrier has materialized it first."""
     total = ga["total"]
-    dl, dlc = _dup_seg_fracs(lines)
-    dp, dpc = _dup_seg_fracs(paras)
-    cols = {
-        "dup_line_frac": dl,
-        "dup_line_char_frac": dlc,
-        "dup_para_frac": dp,
-        "dup_para_char_frac": dpc,
-    }
-    for n in (2, 3, 4):
-        cols[f"top_{n}gram_char_frac"] = top_ngram_char_frac(ga[f"g{n}"], total)
-    for n in (5, 6, 7, 8, 9, 10):
-        cols[f"dup_{n}gram_char_frac"] = dup_ngram_char_frac(
-            ga[f"s{n}"], toks, total, n
-        )
+    out = dict(zip(_SEG_NAMES, (*_dup_seg_fracs(lines), *_dup_seg_fracs(paras))))
+    out["top"] = F.transform(ga["g"], lambda gs: top_ngram_char_frac(gs, total))
+    out["dup"] = F.zip_with(
+        ga["s"], _ns(DUP_NS), lambda srt, n: dup_ngram_char_frac(srt, toks, total, n)
+    )
+    return out
+
+
+def _named(sig: Column) -> dict[str, Column]:
+    """The 13 named signals read from the materialized _signals struct
+    ``sig``, in report order."""
+    cols = {name: sig[name] for name in _SEG_NAMES}
+    for fam, names in _GRAM_NAMES.items():
+        cols.update({name: sig[fam][i] for i, name in enumerate(names)})
     return cols
 
 
-def _passes(cols: dict[str, Column]) -> Column:
-    """The Gopher table-A1 verdict: every signal at or below its bound."""
+def _passes(sig: dict[str, Column] | Column) -> Column:
+    """The Gopher table-A1 verdict: every signal at or below its bound.
+    ``sig`` is the _signals dict or its materialized struct; each gram
+    array is read once, as a whole, so over the dict each fold runs at
+    most once, and the AND stops at the first failing family (segments,
+    then top grams, then duplicated grams)."""
     passes = None
-    for name, bound in GOPHER_REP_THRESHOLDS.items():
-        c = cols[name] <= F.lit(bound)
+    for name in _SEG_NAMES:
+        c = sig[name] <= F.lit(GOPHER_REP_THRESHOLDS[name])
         passes = c if passes is None else (passes & c)
+    for fam, names in _GRAM_NAMES.items():
+        bounds = F.array(*[F.lit(GOPHER_REP_THRESHOLDS[name]) for name in names])
+        ok = F.zip_with(sig[fam], bounds, lambda v, bound: v <= bound)
+        passes = passes & F.forall(ok, lambda x: x)
     return passes
 
 
 def repetition_signals(docs: DataFrame) -> DataFrame:
     """The 13-signal vector + Gopher-threshold verdict per document."""
-    from ..functions.text import generate_barrier
-
     txt = F.coalesce(F.col("text"), F.lit(""))
     toks = tokens(txt)
     base = ensure_parallelism(docs).select(
@@ -287,21 +325,28 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     # the explode of a 1-element struct array is the one construct that
     # genuinely materializes these before the fold columns consume them.
     b = base.withColumn("_ga", F.explode(F.array(_rep_arrays(F.col("toks")))))
-    cols = _signal_cols(F.col("toks"), F.col("lines"), F.col("paras"), F.col("_ga"))
-    # SECOND barrier for the signal values themselves: every signal
-    # expression is consumed TWICE — as an output column and inside the
-    # passes_repetition AND-chain — and CollapseProject inlines
-    # projection-defined columns into each consumer, which would re-run
-    # all 13 folds. Materializing the signal struct once halves the fold
-    # work (same trap, same cure as the gram arrays above).
+    # SECOND barrier for the signal values themselves: the two fold
+    # arrays are read once per element, and every signal is consumed
+    # TWICE — as an output column and inside the passes_repetition
+    # AND-chain — while CollapseProject inlines projection-defined
+    # columns into each consumer, which would re-run a fold per read.
+    # Materializing the signal struct once runs each fold once (same
+    # trap, same cure as the gram arrays above).
     sig = generate_barrier(
-        b, _sig=F.struct(*[c.alias(name) for name, c in cols.items()])
+        b,
+        _sig=F.struct(
+            *[
+                c.alias(name)
+                for name, c in _signals(
+                    F.col("toks"), F.col("lines"), F.col("paras"), F.col("_ga")
+                ).items()
+            ]
+        ),
     )
-    mat = {name: F.col(f"_sig.{name}") for name in cols}
     return sig.select(
         "doc_id",
-        *[c.alias(name) for name, c in mat.items()],
-        _passes(mat).alias("passes_repetition"),
+        *[c.alias(name) for name, c in _named(F.col("_sig")).items()],
+        _passes(F.col("_sig")).alias("passes_repetition"),
     )
 
 
@@ -318,16 +363,18 @@ def with_repetition_verdict(
     batch curation pipeline and the streaming curation gate both call
     (round-8 verdict "Next round #1"), so the thresholds, the floor, and
     the signal definitions cannot drift from ext_repetition_signals: all
-    three surfaces read the same _signal_cols/_passes expressions.
+    three surfaces read the same _signals/_passes expressions.
 
     Map-side and stateless (streaming-safe): one Project materializes
     the token/line/paragraph splits as attributes, one Generate barrier
-    materializes the 9 sorted gram arrays, and the verdict is a single
-    fold chain over those attributes — zero shuffle, no lambda ever
-    indexes an outer array (the O(m^2) HOF trap this module's docstring
-    documents). NULL text verdicts TRUE ('' has no repetition and is
-    under any positive floor): the curation gate's too_short tier owns
-    null text."""
+    materializes the sorted gram arrays, and the verdict is an AND-chain
+    over the unmaterialized signals that reads each fold array once —
+    zero shuffle, each fold run at most once per row, none for a
+    document under the floor or failing an earlier family, and no
+    lambda ever indexes an outer array (the O(m^2) HOF trap this
+    module's docstring documents). NULL text verdicts TRUE ('' has no
+    repetition and is under any positive floor): the curation gate's
+    too_short tier owns null text."""
     txt = F.coalesce(F.col(text_col), F.lit(""))
     pre = df.select(
         "*",
@@ -336,10 +383,9 @@ def with_repetition_verdict(
         F.split(txt, "\n\n").alias("_rparas"),
     )
     b = pre.withColumn("_rga", F.explode(F.array(_rep_arrays(F.col("_rtoks")))))
-    cols = _signal_cols(
-        F.col("_rtoks"), F.col("_rlines"), F.col("_rparas"), F.col("_rga")
+    verdict = _passes(
+        _signals(F.col("_rtoks"), F.col("_rlines"), F.col("_rparas"), F.col("_rga"))
     )
-    verdict = _passes(cols)
     if min_tokens > 0:
         verdict = (F.size("_rtoks") < min_tokens) | verdict
     return b.withColumn(out_col, verdict).drop(

@@ -585,8 +585,9 @@ def curation_verdict(
             tokens("text").alias("toks"),
         )
     ).select("doc_id", "text", "toks", "blk_reason", "lang", "q")
-    # with_repetition_verdict adds its own barrier for the 9 gram arrays
-    # and leaves one boolean attribute (rep_ok) for the reason chain.
+    # with_repetition_verdict adds its own barrier for the sorted gram
+    # arrays and leaves one boolean attribute (rep_ok) for the reason
+    # chain.
     t = with_repetition_verdict(t0)
     # Top-bigram stats map-side: n_bigrams is the bigram count and topc
     # the maximum multiplicity, TX.top_run's run over the SORTED bigram

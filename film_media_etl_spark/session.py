@@ -20,6 +20,15 @@ multi-executor cluster:
   distinct classes, more than Spark's default cache of 100 holds, so at
   the default every pass of a long-lived session recompiled most of its
   plan set, on the driver and again inside tasks.
+- PySpark's DataFrame-debugging origin capture off. With it on, every
+  Column function call (``F.col``, ``F.when``, every operator) first
+  fetches the active session (three py4j round trips), looks up a JVM
+  class, reads a conf, and sets then clears the JVM-side call site.
+  Building ``ext_repetition_signals`` that way sent 10.8k py4j calls
+  and took longer on the driver than Spark took to run it. The one thing
+  lost is the Python file:line in the "DataFrame query context" of
+  runtime errors (an ANSI division by zero, say); the error class,
+  message and SQL fragment are unchanged.
 """
 
 from __future__ import annotations
@@ -92,6 +101,12 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, cpus: int | None = None) -> S
         # name: AQE numbers stages in the order they are re-planned, which
         # varies with concurrent jobs, and a renamed class is a cache miss.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # No Python call-site capture around each Column call (module
+        # docstring): it cost most of the py4j round trips of building
+        # a corpus plan, and only adds the file:line to runtime errors.
+        # Read once per Python process (pyspark.errors.utils caches it),
+        # so it must be set when the session is built.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -86,11 +86,12 @@ def test_token_count_matches_model(spark):
 
 
 def test_ngram_helpers_match_python_model(spark):
-    """functions/text.ngrams (and its position form in
-    repetition_signals._rep_arrays), shingles, adjacent_pairs and top_run
-    against plain-Python models: NULL, "", one token, a double space,
-    repeated grams and seeded random word sequences."""
-    from film_media_etl_spark.queries.repetition_signals import _rep_arrays
+    """functions/text.ngrams (with an int n and with a Column n, and its
+    position form in repetition_signals._rep_arrays), shingles,
+    adjacent_pairs and top_run against plain-Python models: NULL, "",
+    one token, a double space, repeated grams and seeded random word
+    sequences."""
+    from film_media_etl_spark.queries.repetition_signals import DUP_NS, TOP_NS, _rep_arrays
 
     rng = random.Random(SEED)
     texts = [None, "", "one", "a  b", "a b a b a b", "x y x y z x y", "B a b A b a c"]
@@ -102,7 +103,10 @@ def test_ngram_helpers_match_python_model(spark):
         r["i"]: r
         for r in df.select(
             "i",
-            *[ngrams("toks", n).alias(f"n{n}") for n in (2, 3, 5)],
+            *[ngrams("toks", n).alias(f"n{n}") for n in range(2, 11)],
+            F.transform(
+                F.sequence(F.lit(2), F.lit(10)), lambda n: ngrams("toks", n)
+            ).alias("ncol"),
             *[shingles(F.col("toks"), n).alias(f"sh{n}") for n in (2, 3)],
             _rep_arrays(F.col("toks")).alias("ra"),
             top_run(F.sort_array(ngrams("toks", 2))).alias("tr"),
@@ -126,15 +130,18 @@ def test_ngram_helpers_match_python_model(spark):
     for i, text in enumerate(texts):
         toks = [] if text is None else text.lower().split(" ")
         r = rows[i]
-        for n in (2, 3, 5):
+        for n in range(2, 11):
             assert r[f"n{n}"] == grams(toks, n), (text, n)
+            assert r["ncol"][n - 2] == r[f"n{n}"], (text, n)
         for n in (2, 3):
             assert r[f"sh{n}"] == list(dict.fromkeys(grams(toks, n))), (text, n)
-        for n in (2, 3, 4):
-            assert r["ra"][f"g{n}"] == sorted(grams(toks, n)), (text, n)
-        for n in (5, 6, 7, 8, 9, 10):
+        assert TOP_NS == (2, 3, 4) and DUP_NS == (5, 6, 7, 8, 9, 10)
+        assert len(r["ra"]["g"]) == 3 and len(r["ra"]["s"]) == 6, text
+        for k, n in enumerate(TOP_NS):
+            assert r["ra"]["g"][k] == sorted(grams(toks, n)), (text, n)
+        for k, n in enumerate(DUP_NS):
             pos = sorted((g, p + 1) for p, g in enumerate(grams(toks, n)))
-            assert [tuple(x) for x in r["ra"][f"s{n}"]] == pos, (text, n)
+            assert [tuple(x) for x in r["ra"]["s"][k]] == pos, (text, n)
         assert tuple(r["tr"]) == run_model(sorted(grams(toks, 2))), text
 
     arrs = [None, [], [7], [1, 2], [3, 1, 4, 1, 5, 9, 2, 6]]

@@ -215,7 +215,7 @@ def test_banded_pair_ops_emit_each_pair_once(spark, name, id_cols):
 # is a plan change, not a spelling change.
 _TOKENIZING_SCANS = {
     "ext_dedup_exact": 0,
-    "ext_dedup_minhash_survivors": 3,
+    "ext_dedup_minhash_survivors": 2,
     "ext_dedup_substring": 3,
     "ext_repetition_signals": 1,
     "ext_unigram_tokenize": 3,
@@ -232,3 +232,69 @@ def test_tokenizing_scan_census(spark, name):
     final = plan[plan.index("== Final Plan =="):plan.index("\n+- == Initial Plan ==")]
     scans = set(re.findall(r"split\(lower\((?:coalesce\()?text#(\d+)", final))
     assert len(scans) <= _TOKENIZING_SCANS[name], sorted(scans)
+
+
+def test_session_skips_pyspark_call_site_capture(spark):
+    """The engine session turns off PySpark's DataFrame-debugging origin
+    capture, which wrapped every Column call in about seven py4j round
+    trips (session lookup, JVM class lookup, conf read, set and clear of
+    the call site)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+# py4j call and reflection commands sent while building (not running)
+# each perfbench corpus op a second time in a session; memory commands
+# ("m", dereferences) follow Python's garbage collector and are not
+# counted. Ceilings about 10 % above the counts at sf0.001 on 4 cores
+# (CHANGES.md has the counts before and after the call-site capture was
+# dropped and the repetition folds were spelled once).
+_BUILD_ROUND_TRIPS = {
+    "ext_bm25_search": 600,
+    "ext_dedup_exact": 70,
+    "ext_dedup_minhash_survivors": 1100,
+    "ext_dedup_substring": 720,
+    "ext_repetition_signals": 1530,
+    "ext_unigram_tokenize": 1100,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUILD_ROUND_TRIPS))
+def test_corpus_op_build_round_trip_ceiling(spark, name):
+    _q(name, spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        _q(name, spark)
+    finally:
+        client.send_command = send
+    calls = sum(1 for c in sent if c in ("c", "r"))
+    assert calls <= _BUILD_ROUND_TRIPS[name], calls
+
+
+def test_repetition_signals_plan_spells_each_fold_once(spark):
+    """ext_repetition_signals maps one top-gram fold and one dup-coverage
+    fold over its gram arrays (n carried as data) instead of nine per-n
+    copies: its analyzed plan holds 39 lambda functions, four of them
+    the verdict's two whole-array bound checks (86 with the per-n
+    copies)."""
+    analyzed = _q("ext_repetition_signals", spark)._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("lambdafunction(") <= 39
+
+
+def test_unigram_normalizer_is_a_window_not_a_nested_loop_join(spark):
+    """The unigram piece log-probs divide by a window sum over the piece
+    rows; a cross join with the table's own aggregate planned the vocab
+    subtree twice, as a BroadcastNestedLoopJoin."""
+    df = _q("ext_unigram_tokenize", spark)
+    df.collect()  # finalize AQE
+    assert "BroadcastNestedLoopJoin" not in physical_plan(df)

@@ -981,19 +981,31 @@ def test_pagerank_exact_no_cartesian(spark):
 
 def test_plans_md_census_fresh(spark):
     """PLANS.md is asserted-against documentation; regenerate the
-    operator census for every headline query and diff it against the
-    checked-in file so a plan-affecting commit cannot ship a stale
-    PLANS.md (round-3 verdict #9). Intentionally fails on drift — fix
-    by rerunning `python tools/gen_plans.py`."""
+    operator census and the normalized operator tree for every headline
+    query and diff them against the checked-in file so a plan-affecting
+    commit cannot ship a stale PLANS.md (round-3 verdict #9). The census
+    alone let trees drift: an added Project left every count unchanged.
+    Intentionally fails on drift — fix by rerunning
+    `python tools/gen_plans.py`."""
     import os
     import re
+    import sys
 
     from bench import HEADLINE
     from film_media_etl_spark.queries import all_queries
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    from capture_plans import formatted_plan, normalize_plan
+    from gen_plans import plan_tree
+
     text = open(os.path.join(repo, "PLANS.md")).read()
-    checked = dict(re.findall(r"^## (\S+)\n\n`([^`]*)`", text, re.M))
+    checked = {
+        name: (census, normalize_plan(tree))
+        for name, census, tree in re.findall(
+            r"^## (\S+)\n\n`([^`]*)`\n\n```\n(.*?)\n```", text, re.M | re.S
+        )
+    }
     assert set(checked) == set(HEADLINE), (
         "PLANS.md query set != bench headline set — rerun tools/gen_plans.py"
     )
@@ -1001,11 +1013,13 @@ def test_plans_md_census_fresh(spark):
     sf = "/root/testdata/sf0.001"  # gen_plans.py's default SF_DIR
     stale = {}
     for name in HEADLINE:
-        s = plan_summary(qs[name](spark, sf))
+        df = qs[name](spark, sf)
+        s = plan_summary(df)
         census = ", ".join(f"{k}={v}" for k, v in s.items() if v)
-        if census != checked[name]:
-            stale[name] = (checked[name], census)
-    assert not stale, f"PLANS.md stale for {stale} — rerun tools/gen_plans.py"
+        fresh = (census, plan_tree(formatted_plan(df)))
+        if fresh != checked[name]:
+            stale[name] = (checked[name], fresh)
+    assert not stale, f"PLANS.md stale for {sorted(stale)}: {stale} — rerun tools/gen_plans.py"
 
 
 def test_model_inference_broadcasts_weights(spark):

@@ -16,13 +16,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from capture_plans import formatted_plan, normalize_plan  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_PLANS_SF", "/root/testdata/sf0.001")
 
 
-def formatted_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def plan_tree(plan: str) -> str:
+    """The operator tree of a formatted plan (its first section, without
+    the per-node details), normalized as tools/capture_plans does."""
+    return normalize_plan(plan.split("\n\n")[0].strip())
 
 
 def main() -> None:
@@ -49,8 +51,6 @@ def main() -> None:
         df = qs[name](spark, SF_DIR)
         s = plan_summary(df)
         plan = formatted_plan(df)
-        # keep the physical-plan section; drop the verbose node details
-        plan_head = plan.split("\n\n")[0]
         census = ", ".join(f"{k}={v}" for k, v in s.items() if v)
         lines += [
             f"## {name}",
@@ -58,7 +58,7 @@ def main() -> None:
             f"`{census}`",
             "",
             "```",
-            plan_head.strip(),
+            plan_tree(plan),
             "```",
             "",
         ]
